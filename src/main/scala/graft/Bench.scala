@@ -13,6 +13,13 @@ import graft.BenchCdc.pairedExcludedJson
   * BASELINE.md): the same seeded change log replayed in taskset-pinned
   * child JVMs at N and 4N cores, interleaved best-of-reps, reporting
   * events/sec at both and efficiency = (tput_4N / tput_N) / 4.
+  * Part 3 replays the same log as SPARK_GRAFT_BENCH_EPOCHS incremental
+  * epochs (default 8; 0 or 1 skips it).
+  *
+  * Space: the logs live under SPARK_GRAFT_BENCH_WORK (default `/dev/shm`,
+  * tmpfs). Part 2's 8M-event log takes ~4 GB and part 3 caches its own
+  * batch layout of the same events, ~4 GB more — give the tmpfs ~8 GB.
+  * Whole-number env knobs that do not parse fail naming the variable.
   */
 object Bench {
 
@@ -29,7 +36,7 @@ object Bench {
     // never emits comma decimal separators
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = BenchCdc.envInt("SPARK_GRAFT_CPUS", 32)
 
     // ---- part 1: operator queries --------------------------------------
     val sq = querySession(cpus)
@@ -102,12 +109,12 @@ object Bench {
     // its OWN cached workspace (Cfg.work embeds the batch count): ~4 GB
     // more tmpfs alongside part 2's, generated once per boot — the same
     // events in a different batch layout cannot share a log dir.
-    val epochs = sys.env.getOrElse("SPARK_GRAFT_BENCH_EPOCHS", "8").toInt
+    val epochs = BenchCdc.envInt("SPARK_GRAFT_BENCH_EPOCHS", 8)
     val cdcIncr =
       if (epochs <= 1) ""
       else {
         val ri = BenchCdc.runScaling(coreList,
-          budgetSecs = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_INCR", "1200").toInt,
+          budgetSecs = BenchCdc.envInt("SPARK_GRAFT_BENCH_BUDGET_INCR", 1200),
           nBatches = Some(epochs))
         // echo the MEASURED (post-clamp) epoch count, not the request
         s""","cdc_incremental":${cdcJson(ri, extra = s""""epochs":${ri.nBatches},""")}"""

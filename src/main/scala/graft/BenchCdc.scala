@@ -72,8 +72,13 @@ object BenchCdc {
     if (f.exists()) loop(f)
   }
 
-  private def envInt(k: String, d: Int) = sys.env.getOrElse(k, d.toString).toInt
-  private def envLong(k: String, d: Long) = sys.env.getOrElse(k, d.toString).toLong
+  /** A whole-number env knob; a malformed value fails naming the
+    * variable and the value instead of a bare NumberFormatException. */
+  private[graft] def envInt(k: String, d: Int): Int = envParsed(k, d)(_.toIntOption)
+  private[graft] def envLong(k: String, d: Long): Long = envParsed(k, d)(_.toLongOption)
+  private def envParsed[T](k: String, d: T)(parse: String => Option[T]): T =
+    sys.env.get(k).fold(d)(v => parse(v.trim).getOrElse(
+      throw new IllegalArgumentException(s"$k must be a whole number, got '$v'")))
 
   private[graft] case class Cfg(nEvents: Long, nBatches: Int, buckets: Int, salt: Int,
                                 nRepos: Int, pathsPerRepo: Int, format: String) {
@@ -352,7 +357,7 @@ object BenchCdc {
     * before CHILD_READY). Generous vs the ~15-110 s observed range; a
     * rep exceeding it is treated as wedged and its child replaced. */
   private val RepTimeoutSecs: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_REP_TIMEOUT", "900").toLong
+    envLong("SPARK_GRAFT_BENCH_REP_TIMEOUT", 900L)
 
   /** A persistent pinned stepping child (see [[childStepMain]]): spawn +
     * warm once, then each `step()` runs exactly one timed rep. `None` from
@@ -532,7 +537,7 @@ object BenchCdc {
     * all reps + estimates. See ScalingEstimator for the estimator design
     * and the adaptive sampling policy. */
   def runScaling(coreList: Seq[Int],
-                 budgetSecs: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "1320").toInt,
+                 budgetSecs: Int = envInt("SPARK_GRAFT_BENCH_BUDGET", 1320),
                  targetEff: Double = 0.8,
                  /** Epoch count override (INCREMENTAL-replay mode: the
                    * same log split into N batch dirs, one ledgered MERGE
@@ -659,8 +664,10 @@ object BenchCdc {
     * with local[N] oversubscribing the host, printing normal-looking but
     * meaningless numbers). */
   private[graft] def coreListFromEnv(): Seq[Int] = {
-    val coreList = sys.env.getOrElse("SPARK_GRAFT_CORES_LIST", "2,8")
-      .split(',').map(_.trim.toInt).toSeq
+    val raw = sys.env.getOrElse("SPARK_GRAFT_CORES_LIST", "2,8")
+    val coreList = raw.split(',').map(_.trim.toIntOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CORES_LIST must be comma-separated whole numbers, got '$raw'"))).toSeq
     val avail = Runtime.getRuntime.availableProcessors
     require(coreList.forall(c => c >= 1 && c <= avail),
       s"SPARK_GRAFT_CORES_LIST $coreList exceeds available processors ($avail)")

@@ -228,8 +228,8 @@ object StreamingReplay {
     // NOTE: the two branches are two scans of the same files per trigger
     // (json parses twice). The split must live in the PLAN — a null event
     // time must never reach the stateful operator — and mirrors the
-    // merge's own measured re-read-over-cache choice (MergeInto
-    // cacheSource scaladoc); the poison branch is empty on healthy logs.
+    // merge, which re-reads its source rather than caching it (measured
+    // faster); the poison branch is empty on healthy logs.
     val stream = deduped.unionByName(base.where(!statefulOk))
     // The listener filters on runId, which is only known AFTER start():
     // a batch completing in that window is dropped by the listener and

@@ -204,6 +204,11 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog with TableCatalog
     while (true) {
       val snap = t.currentSnapshot().getOrElse(throw new NoSuchTableException(ident))
       val visible = StructType(snap.schema.fields.filterNot(_.name == LakeTable.DeletedCol))
+      // reserved names compare the way the analyzer resolves names:
+      // case-folded unless spark.sql.caseSensitive
+      val fold: String => String =
+        if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) identity
+        else _.toLowerCase(java.util.Locale.ROOT)
       // renames first (identity-preserving), then the add/widen delta
       // against the renamed shape — so one statement mixing both resolves
       // names consistently
@@ -224,8 +229,8 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog with TableCatalog
           // under one name inside committed files of different eras
           val others = schema.fields.filterNot(_.name == old)
           val taken = (others.flatMap(f => f.name +: FieldIds.aliases(f)) ++
-            GraftCatalog.RenameReserved).toSet
-          require(!taken.contains(nw),
+            GraftCatalog.RenameReserved).map(fold).toSet
+          require(!taken.contains(fold(nw)),
             s"column name $nw is already in use (as a live column, a former " +
               "name, or an engine key)")
           StructType(schema.fields.map(f =>
@@ -241,7 +246,7 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog with TableCatalog
             s"new column $name must be nullable (rows committed before the " +
               "ALTER have no value for it)")
           require(add.dataType() != NullType, s"new column $name needs a real type")
-          require(!FieldIds.allNames(current).contains(name),
+          require(!FieldIds.allNames(current).map(fold).contains(fold(name)),
             s"column name $name is already in use (live or as a former name)")
           GraftCatalog.requireReadableType(name, add.dataType())
           StructField(name, add.dataType(), nullable = true)
@@ -746,10 +751,10 @@ private final class GraftResultScan(schema: StructType, rs: Array[InternalRow])
   override def rows(): Array[InternalRow] = rs
 }
 
-/** DDL-time schema validation: the set of column types the graft row
-  * reader can decode (GraftPartitionReader.readValue). Accepting a
-  * richer type at CREATE/ALTER time would commit a table that is
-  * permanently unreadable through the row path — fail at DDL instead. */
+/** DDL-time schema validation: the flat column types the graft reader
+  * (GraftColumnarPartitionReader, Spark's vectorized parquet decode) is
+  * kept to. Accepting a richer type at CREATE/ALTER time would commit a
+  * table outside the lake's flat state schemas — fail at DDL instead. */
 object GraftCatalog {
   /** Engine key columns: bucketing (`repo`), merge keys (`repo`,`path`),
     * LWW ordering + manifest stats (`lsn`), and the change-op envelope

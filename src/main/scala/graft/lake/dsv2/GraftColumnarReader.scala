@@ -1,100 +1,143 @@
 package graft.lake.dsv2
 
 import graft.lake.LakeTable
+import graft.schema.FieldIds
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.types.StructType
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.graftx.Bridge
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Columnar (vectorized) read path for the graft DSv2 scan.
+/** Reader factory of every graft DSv2 read — whole-state scans, point
+  * lookups, `changesFrom` ranges and streaming micro-batches. Columnar
+  * only: constant per factory, so Spark's all-or-nothing columnar
+  * requirement on the exec node holds by construction.
+  *
+  * `eras` maps a requested column to the other names a file may store it
+  * under (rename eras, [[graft.schema.FieldIds]]); it is computed on the
+  * driver from a schema that carries the alias metadata — Spark's column
+  * pruner is not obligated to preserve field metadata into `required`. */
+final class GraftReaderFactory(required: StructType, includeTombstones: Boolean,
+                               eras: Map[String, Seq[String]])
+    extends PartitionReaderFactory {
+  /** Conf for Spark's vectorized reader, prepared once on the driver
+    * (SQLConf-derived keys; see Bridge.parquetReadConf). Built eagerly so
+    * it serializes with the factory. */
+  private val conf = Bridge.parquetReadConf(org.apache.spark.sql.SparkSession.active)
+
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft scans read columnar batches only")
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new GraftColumnarPartitionReader(partition.asInstanceOf[GraftInputPartition],
+      required, includeTombstones, conf.value, eras)
+}
+
+/** The one read path of the graft DSv2 layer.
   *
   * Delegates the parquet decode to Spark's own
   * `VectorizedParquetRecordReader` — column-parallel page decompression
   * straight into ColumnVectors, handed to whole-stage codegen as
   * ColumnarBatches with zero per-row object construction. That is the
-  * read shape wide binary/media-heavy rows need at 100 TB, where the
-  * row-at-a-time Group decode (GraftPartitionReader) pays an object tree
-  * per row. The reference stores Arrow columnar for the same reason
-  * (reference src/places/writer.rs:3-13) but then decodes rows one at a
-  * time — the wart VERDICT r3 told us not to replicate.
+  * read shape wide binary/media-heavy rows need at 100 TB. The reference
+  * stores Arrow columnar for the same reason (reference
+  * src/places/writer.rs:3-13) but then decodes rows one at a time.
   *
-  * The lake's residual read semantics ride on top WITHOUT copying:
-  * tombstone rows (`_deleted`, hidden under `read()` semantics) are
-  * dropped by wrapping each projected vector in a [[SelectedColumnVector]]
-  * — a selection-map delegate over the reader's own vectors (the
-  * zero-copy trick Iceberg's vectorized delete-filter uses). An all-live
-  * batch (the common case: most files have few tombstones) passes the
-  * reader's vectors through untouched.
+  * Pushed predicates: the partition's `lsn > bound` (CDC ranges, streams,
+  * `lsn >` filters), `repo =` and `path =` (point lookups) go into the
+  * reader's conf as a parquet filter predicate, which drives row-group
+  * stats, dictionary and column-index skipping. Each is pushed only when
+  * this file's footer holds the column — a predicate on an absent column
+  * evaluates against all-null and would skip every row group.
+  *
+  * Residual selection: skipping is coarse (row groups, pages), so the
+  * same predicates, plus the tombstone flag under `read()` semantics, are
+  * applied per row by wrapping each projected vector in a
+  * [[SelectedColumnVector]] — a selection-map delegate over the reader's
+  * own vectors (the zero-copy trick Iceberg's vectorized delete-filter
+  * uses). Predicate columns the scan does not project are decoded as
+  * filter-only columns after the projected ones. A null `lsn` (a file
+  * predating the column) is kept, as is a null `_deleted`. A batch with
+  * every row selected passes the reader's vectors through untouched.
   *
   * Schema evolution is the vectorized reader's native behavior: a
   * requested column absent from an old file reads as all-null
   * (missing-column vector), and a column widened since the file was
   * written (int→long, float→double) decodes through Spark's widening
-  * updaters — the same tolerant-reader rules the row path implements by
-  * hand.
-  *
-  * The scan chooses this path only for whole-state scans (no lsn bound,
-  * no key point-lookup): those carry pushed row-group/dictionary filters
-  * that the row reader applies via parquet-mr record filtering, and they
-  * are latency-bound single-file reads where vectorization buys nothing.
+  * updaters — the tolerant-reader rule, reference
+  * src/places/place_index.rs:359-370. Renamed columns are requested under
+  * the name this file stores them (FieldIds.storedName).
   */
-final class GraftColumnarPartitionReader(absPath: String,
-                                         /** Columns to decode, in batch
-                                           * order: the projected columns
-                                           * first, then `_deleted` when it
-                                           * is read only for filtering. */
-                                         readSchema: StructType,
-                                         /** How many leading columns of
-                                           * `readSchema` the scan emits. */
-                                         projectLen: Int,
-                                         filterTombstones: Boolean,
-                                         rangeStart: Long, rangeEnd: Long,
+final class GraftColumnarPartitionReader(p: GraftInputPartition,
+                                         required: StructType,
+                                         includeTombstones: Boolean,
                                          conf0: Configuration,
-                                         /** current name → former names
-                                           * (rename eras, FieldIds). */
-                                         aliasMap: Map[String, Seq[String]] = Map.empty)
+                                         eras: Map[String, Seq[String]])
     extends PartitionReader[ColumnarBatch] {
 
   private val conf = new Configuration(conf0)
-  private val reader =
-    org.apache.spark.sql.graftx.Bridge.vectorizedParquetReader(4096)
+  private val reader = Bridge.vectorizedParquetReader(4096)
   private var initialized = false
   private var batch: ColumnarBatch = _
 
-  private val delIdx =
-    if (filterTombstones) readSchema.fieldIndex(LakeTable.DeletedCol) else -1
+  private val lsnBound = p.lsnLowerExclusive
+  private val hasLsnBound = lsnBound != Long.MinValue
+  private val repoEq = Option(p.repoEq).map(UTF8String.fromString).orNull
+  private val pathEq = Option(p.pathEq).map(UTF8String.fromString).orNull
+
+  /** Columns to decode, in batch order: the projected columns, then the
+    * filter-only ones. `_deleted` is always decoded, so even a
+    * zero-column projection has a column to count rows by. */
+  private val readSchema: StructType = StructType(required.fields ++ Seq(
+    Some(StructField(LakeTable.DeletedCol, BooleanType)),
+    if (hasLsnBound) Some(StructField("lsn", LongType)) else None,
+    Option(repoEq).map(_ => StructField("repo", StringType)),
+    Option(pathEq).map(_ => StructField("path", StringType))
+  ).flatten.filterNot(f => required.fieldNames.contains(f.name)))
+
+  private def indexOf(name: String, used: Boolean): Int =
+    if (used) readSchema.fieldIndex(name) else -1
+  private val delIdx = indexOf(LakeTable.DeletedCol, !includeTombstones)
+  private val lsnIdx = indexOf("lsn", hasLsnBound)
+  private val repoIdx = indexOf("repo", repoEq != null)
+  private val pathIdx = indexOf("path", pathEq != null)
+  private val residual = delIdx >= 0 || lsnIdx >= 0 || repoIdx >= 0 || pathIdx >= 0
 
   private def init(): Unit = {
-    // rename-era substitution (FieldIds aliases): Spark's vectorized
-    // reader resolves requested columns BY NAME against the file, so a
-    // column requested under its post-rename name would read all-null
-    // from a pre-rename file. Substitute the era name THIS file stores
-    // the column under — positional, so the decoded vector lands in the
-    // right batch slot regardless of which name era produced it. The
-    // footer consult is the same LRU-cached lookup the row path uses;
-    // alias-free tables skip it entirely.
-    if (aliasMap.nonEmpty) {
-      val fileSchema = GraftPartitionReader.fileSchemaOf(absPath, new Path(absPath), conf)
-      val sub = StructType(readSchema.fields.map { f =>
-        if (fileSchema.containsField(f.name)) f
-        else aliasMap.getOrElse(f.name, Nil).find(fileSchema.containsField) match {
-          case Some(era) => f.copy(name = era)
-          case None => f
-        }
-      })
-      if (sub != readSchema)
-        org.apache.spark.sql.graftx.Bridge.setRequestedSchema(conf, sub.json)
-    }
-    // same byte-range rule as the row path (and Spark's own parquet
-    // splits): a row group belongs to the split holding its midpoint
+    val path = new Path(p.absPath)
+    // the footer decides, per file, the name each column is stored under
+    // and which predicates can be pushed; a plain scan of a never-renamed
+    // table needs neither and skips it
+    val requested =
+      if (eras.isEmpty && !hasLsnBound && repoEq == null && pathEq == null) readSchema
+      else {
+        val fileSchema = GraftColumnarPartitionReader.fileSchemaOf(p.absPath, path, conf)
+        val holds: String => Boolean = fileSchema.containsField
+        pushedPredicate(holds).foreach(
+          org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, _))
+        // positional: the decoded vector lands in the requested slot
+        // whichever name era the file stores it under
+        StructType(readSchema.fields.map(f =>
+          f.copy(name = FieldIds.storedName(f.name, eras, holds))))
+      }
+    Bridge.setRequestedSchema(conf, requested.json)
+    // byte-range split (Spark's own parquet split rule): a row group
+    // belongs to the split holding its midpoint
     val length =
-      if (rangeEnd == Long.MaxValue) Long.MaxValue - rangeStart
-      else rangeEnd - rangeStart
+      if (p.rangeEnd == Long.MaxValue) Long.MaxValue - p.rangeStart
+      else p.rangeEnd - p.rangeStart
     // mapred.FileSplit (which extends the mapreduce one): Spark 4's
     // SpecificParquetRecordReaderBase downcasts to the old-API class
     val split = new org.apache.hadoop.mapred.FileSplit(
-      new Path(absPath), rangeStart, length, Array.empty[String])
+      path, p.rangeStart, length, Array.empty[String])
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
     reader.initialize(split, ctx)
@@ -104,20 +147,31 @@ final class GraftColumnarPartitionReader(absPath: String,
     initialized = true
   }
 
+  private def pushedPredicate(holds: String => Boolean): Option[FilterPredicate] =
+    Seq(
+      if (hasLsnBound && holds("lsn"))
+        Some(FilterApi.gt(FilterApi.longColumn("lsn"), java.lang.Long.valueOf(lsnBound)))
+      else None,
+      Option(p.repoEq).filter(_ => holds("repo"))
+        .map(v => FilterApi.eq(FilterApi.binaryColumn("repo"), Binary.fromString(v))),
+      Option(p.pathEq).filter(_ => holds("path"))
+        .map(v => FilterApi.eq(FilterApi.binaryColumn("path"), Binary.fromString(v)))
+    ).flatten.reduceOption[FilterPredicate](FilterApi.and)
+
   override def next(): Boolean = {
     if (!initialized) init()
     while (reader.nextBatch()) {
       val rb = reader.resultBatch()
       val n = rb.numRows()
       if (n > 0) {
-        if (!filterTombstones) { batch = project(rb, n); return true }
-        val del = rb.column(delIdx)
+        if (!residual) { batch = project(rb, n); return true }
+        val sel = new Array[Int](n)
         var live = 0
         var i = 0
-        while (i < n) { if (!isDel(del, i)) live += 1; i += 1 }
+        while (i < n) { if (keep(rb, i)) { sel(live) = i; live += 1 }; i += 1 }
         if (live == n) { batch = project(rb, n); return true }
-        if (live > 0) { batch = select(rb, n, live); return true }
-        // all-tombstone batch: read on
+        if (live > 0) { batch = select(rb, sel, live); return true }
+        // nothing selected: read on
       }
     }
     false
@@ -127,33 +181,53 @@ final class GraftColumnarPartitionReader(absPath: String,
 
   override def close(): Unit = reader.close()
 
-  // a null _deleted (file predates the column) is live
-  private def isDel(v: ColumnVector, i: Int): Boolean =
-    !v.isNullAt(i) && v.getBoolean(i)
+  private def keep(rb: ColumnarBatch, i: Int): Boolean =
+    (delIdx < 0 || { val v = rb.column(delIdx); v.isNullAt(i) || !v.getBoolean(i) }) &&
+      (lsnIdx < 0 || { val v = rb.column(lsnIdx); v.isNullAt(i) || v.getLong(i) > lsnBound }) &&
+      (repoIdx < 0 || equalsAt(rb.column(repoIdx), i, repoEq)) &&
+      (pathIdx < 0 || equalsAt(rb.column(pathIdx), i, pathEq))
 
-  /** All rows live: hand the reader's vectors through, projected down to
-    * the emitted columns (drops a filter-only `_deleted`). */
-  private def project(rb: ColumnarBatch, n: Int): ColumnarBatch = {
-    val cols = new Array[ColumnVector](projectLen)
-    var i = 0
-    while (i < projectLen) { cols(i) = rb.column(i); i += 1 }
-    new ColumnarBatch(cols, n)
+  private def equalsAt(v: ColumnVector, i: Int, want: UTF8String): Boolean =
+    !v.isNullAt(i) && v.getUTF8String(i) == want
+
+  /** Every row selected: hand the reader's vectors through, projected
+    * down to the emitted columns (drops the filter-only ones). */
+  private def project(rb: ColumnarBatch, n: Int): ColumnarBatch =
+    new ColumnarBatch(Array.tabulate[ColumnVector](required.length)(rb.column), n)
+
+  /** Some rows selected: emit them via a selection map — no data moves. */
+  private def select(rb: ColumnarBatch, sel: Array[Int], live: Int): ColumnarBatch = {
+    val rows = java.util.Arrays.copyOf(sel, live)
+    new ColumnarBatch(Array.tabulate[ColumnVector](required.length)(k =>
+      new SelectedColumnVector(rb.column(k), rows)), live)
   }
+}
 
-  /** Mixed batch: emit only live rows via a selection map — no data moves. */
-  private def select(rb: ColumnarBatch, n: Int, live: Int): ColumnarBatch = {
-    val sel = new Array[Int](live)
-    val del = rb.column(delIdx)
-    var i = 0
-    var j = 0
-    while (i < n) { if (!isDel(del, i)) { sel(j) = i; j += 1 }; i += 1 }
-    val cols = new Array[ColumnVector](projectLen)
-    var k = 0
-    while (k < projectLen) {
-      cols(k) = new SelectedColumnVector(rb.column(k), sel)
-      k += 1
+object GraftColumnarPartitionReader {
+  /** Per-executor cache of parquet file schemas. Lake data files are
+    * IMMUTABLE once published (uuid-named, never rewritten in place), so
+    * the path is a sound key. Saves one footer open+parse per SPLIT of a
+    * multi-split file and per revisit — streaming CDC consumers re-plan
+    * the same files every micro-batch, and object-storage footer reads
+    * are a round-trip each. Bounded LRU, access-ordered. */
+  private val SchemaCacheMax = 1024
+  private val schemaCache =
+    new java.util.LinkedHashMap[String, MessageType](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, MessageType]): Boolean =
+        size() > SchemaCacheMax
     }
-    new ColumnarBatch(cols, live)
+
+  private[dsv2] def fileSchemaOf(key: String, path: Path, conf: Configuration): MessageType = {
+    schemaCache.synchronized {
+      val hit = schemaCache.get(key)
+      if (hit != null) return hit
+    }
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val s = try r.getFooter.getFileMetaData.getSchema finally r.close()
+    schemaCache.synchronized { schemaCache.put(key, s): Unit }
+    s
   }
 }
 
@@ -185,8 +259,7 @@ final class SelectedColumnVector(base: ColumnVector, sel: Array[Int])
   override def getDecimal(i: Int, precision: Int, scale: Int)
       : org.apache.spark.sql.types.Decimal =
     base.getDecimal(sel(i), precision, scale)
-  override def getUTF8String(i: Int): org.apache.spark.unsafe.types.UTF8String =
-    base.getUTF8String(sel(i))
+  override def getUTF8String(i: Int): UTF8String = base.getUTF8String(sel(i))
   override def getBinary(i: Int): Array[Byte] = base.getBinary(sel(i))
   override def getArray(i: Int): org.apache.spark.sql.vectorized.ColumnarArray =
     base.getArray(sel(i))

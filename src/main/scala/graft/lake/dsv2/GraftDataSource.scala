@@ -593,6 +593,7 @@ final class GraftScan(root: String, physicalSchema: StructType, required: Struct
       s"runtimePruned=$runtimePruned " +
       s"keyFilter=${Seq(Option(repoEq).map(r => s"repo=$r"),
         Option(pathEq).map(p => s"path=$p")).flatten.mkString("&")} " +
+      s"lsnAbove=${if (rowBound == Long.MinValue) "" else rowBound} " +
       s"cols=${required.fieldNames.mkString(",")}"
   override def planInputPartitions(): Array[InputPartition] =
     GraftSplit.partitions(root, files, rowBound, maxSplitBytes, repoEq, pathEq)
@@ -676,21 +677,9 @@ final class GraftScan(root: String, physicalSchema: StructType, required: Struct
       runtimePruned += before - files.size
     }
   }
-  /** Vectorized (columnar) decode for whole-state scans; row decode where
-    * pushed parquet filters do the work. An lsn-bounded (CDC-range) or
-    * key-point-lookup scan reads few rows through row-group/dictionary
-    * skipping the columnar path does not carry — and those scans are
-    * latency-bound, not decode-bound. Everything else (the analytic scan
-    * over a wide table, exactly where decode cost dominates) goes
-    * columnar. `.option("columnar", false)` opts out. */
-  private def columnarEligible: Boolean =
-    options.getBoolean("columnar", true) &&
-      rowBound == Long.MinValue && repoEq == null && pathEq == null &&
-      !(required.isEmpty && includeTombstones) // zero-column batch shape
-
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(physicalSchema, required, includeTombstones,
-      columnar = columnarEligible)
+    new GraftReaderFactory(required, includeTombstones,
+      graft.schema.FieldIds.aliasMap(physicalSchema))
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(root, physicalSchema, required,

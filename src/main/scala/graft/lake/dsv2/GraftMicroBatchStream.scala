@@ -145,12 +145,23 @@ final class GraftMicroBatchStream(
     val toV = end.asInstanceOf[GraftOffset].version
     if (toV <= fromV) return Array.empty
     val t = table
-    val (entries, bound) = GraftChanges.entriesAfter(t, fromV, t.snapshotAt(toV))
+    val to = t.snapshotAt(toV)
+    endSchema = to.schema
+    val (entries, bound) = GraftChanges.entriesAfter(t, fromV, to)
     GraftSplit.partitions(root, entries, bound, maxSplitBytes)
   }
 
+  /** Schema of the last planned range's end snapshot. The stream's column
+    * names stay pinned to `physicalSchema` (its start), but a file in the
+    * range may store a column under a name it took since (RENAME COLUMN
+    * committed mid-stream): the reader resolves each pinned column by
+    * field id against this schema. Spark plans the partitions before it
+    * asks for the reader factory. */
+  @volatile private var endSchema: StructType = physicalSchema
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(physicalSchema, required, includeTombstones)
+    new GraftReaderFactory(required, includeTombstones,
+      graft.schema.FieldIds.pinnedAliases(physicalSchema, endSchema))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

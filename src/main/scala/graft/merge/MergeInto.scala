@@ -64,16 +64,7 @@ final class MergeInto(
     table: LakeTable,
     numBuckets: Int = 16,
     saltBuckets: Int = 4,
-    recordMeta: Boolean = true,
-    /** Cache the aligned source for the epoch so the touched-bucket scan
-      * and the merge evaluate the source once, not twice. MEASURED SLOWER
-      * on the local JSON WAL bench (8 cores, 8M events: 29.0s cached vs
-      * 18.0s re-parsed; 2 cores: 75.7 vs 55.4): the touched-bucket scan
-      * is column-pruned to `repo` (a cheap skip-parse), while caching
-      * materializes every row. Worth enabling only when the source is
-      * genuinely expensive twice — a remote/decompressing source, or a
-      * multi-consumer epoch. */
-    cacheSource: Boolean = false
+    recordMeta: Boolean = true
 ) {
   import LakeTable.DeletedCol
 
@@ -191,253 +182,248 @@ final class MergeInto(
     val badCond = col("lsn").isNull || col("repo").isNull || col("path").isNull || !opOk
     val inObs = Observation(s"merge-in-$epochId")
     val aligned = align(events, evolvedWithOp)
-    val source0 = aligned
+    val source = aligned
       .observe(inObs, count(lit(1)).as("n"),
         approx_count_distinct(col("lsn")).as("n_lsn"),
         min(col("lsn")).as("min_lsn"),
         sum(when(badCond, 1L).otherwise(0L)).as("n_bad"))
       .where(!badCond)
-    val source = if (cacheSource) source0.persist() else source0
 
-    try {
-      // --- bucket pruning -------------------------------------------------
-      // Touched buckets: tiny distinct over the batch (≤ numBuckets values).
-      // Dedup cannot change the bucket set (a dropped duplicate shares its
-      // lsn/repo with a survivor), so this reads the raw source — one cheap
-      // scan-only job, no cache materialization.
-      // FRESH-TABLE fast path: with no snapshot there are no target files
-      // to prune and no rebase that could consult the set, so the scan job
-      // is pure overhead — skipping it saves a backfill epoch (the dominant
-      // cost of replaying a log from zero) one full pass over the source.
-      // The write's dynamic partitioning still creates only the buckets
-      // that exist; stats take the bucket count from the output
-      // observation instead (below).
-      val touched: Set[Int] = snapOpt match {
-        case None => (0 until numBuckets).toSet
-        case Some(_) => timed("touched")(source.select(bucketExpr.as(BucketCol)).distinct()
-          .collect().map(_.getInt(0)).toSet)
-      }
+    // --- bucket pruning -------------------------------------------------
+    // Touched buckets: tiny distinct over the batch (≤ numBuckets values).
+    // Dedup cannot change the bucket set (a dropped duplicate shares its
+    // lsn/repo with a survivor), so this reads the raw source — one cheap
+    // scan-only job.
+    // FRESH-TABLE fast path: with no snapshot there are no target files
+    // to prune and no rebase that could consult the set, so the scan job
+    // is pure overhead — skipping it saves a backfill epoch (the dominant
+    // cost of replaying a log from zero) one full pass over the source.
+    // The write's dynamic partitioning still creates only the buckets
+    // that exist; stats take the bucket count from the output
+    // observation instead (below).
+    val touched: Set[Int] = snapOpt match {
+      case None => (0 until numBuckets).toSet
+      case Some(_) => timed("touched")(source.select(bucketExpr.as(BucketCol)).distinct()
+        .collect().map(_.getInt(0)).toSet)
+    }
 
-      val targetFiles = snapOpt.map(_.filesIn(touched)).getOrElse(Seq.empty)
-      val target = align(
-        table.readFiles(snapOpt.map(_.schema).getOrElse(physicalSchema), targetFiles)
-          .withColumn("op", when(col(DeletedCol), lit("D")).otherwise(lit("U"))),
-        evolvedWithOp)
+    val targetFiles = snapOpt.map(_.filesIn(touched)).getOrElse(Seq.empty)
+    val target = align(
+      table.readFiles(snapOpt.map(_.schema).getOrElse(physicalSchema), targetFiles)
+        .withColumn("op", when(col(DeletedCol), lit("D")).otherwise(lit("U"))),
+      evolvedWithOp)
 
-      // --- merge: per-key argmax by lsn, single exchange --------------------
-      // ONE shuffle serves both the merge and the file layout: we
-      // repartition explicitly on (bucket, salt) — bucket = f(repo),
-      // salt = g(path) — then take the lsn-argmax per key with a window
-      // over (bucket, salt, repo, path). Since the partitioning
-      // expressions are a subset of the window partition spec,
-      // EnsureRequirements recognizes the distribution as satisfied and
-      // plans the window WITHOUT a second exchange; each reducer task
-      // sorts its partition once and writes exactly its own bucket files.
-      // (Partitioning by the two derived columns doesn't change the
-      // argmax: (repo, path) determines both.) The window+sort form beats
-      // `groupBy.agg(max_by(struct(...)))` ~2× here: a struct-valued
-      // aggregation buffer forces the slow aggregate path, while the sort
-      // runs on flat UnsafeRows. The salt dimension keeps a hot repo's
-      // bucket spread over `saltBuckets` tasks/files.
-      val saltExpr = pmod(xxhash64(col("path")), lit(saltBuckets)).cast(IntegerType)
-      val outObs = Observation(s"merge-out-$epochId")
-      // Tie-break equal lsns toward the TARGET copy (an at-least-once
-      // redelivery ties with the identical already-applied row): the
-      // argmax output is unchanged either way, but it makes `_src` below
-      // a precise ordered-delivery detector — a SOURCE row can then only
-      // win at an lsn at or below the previous high-water mark if it is
-      // a genuinely NOVEL late event (redeliveries lose the tie), which
-      // is exactly the case that breaks incremental readers'
-      // `lsn > highWater` pruning (see Snapshot.unorderedCommits).
-      val SrcCol = "_src"
-      val prevHw = snapOpt.flatMap(_.highWaterLsn)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(BucketCol), col(SaltCol), col("repo"), col("path"))
-        .orderBy(col("lsn").desc, col(SrcCol).asc)
-      // SOURCE on the union's left: the combined Dataset (and therefore
-      // every action on it, including the write command below) binds to
-      // the left operand's SparkSession = the events dataframe's session.
-      // That is load-bearing for the Observations: inside foreachBatch the
-      // batch df lives on the stream's CLONED session, and Spark's
-      // ExecutionListenerBus delivers execution-end events only to the
-      // session that ran the action (sessionUUID filter) — an Observation
-      // registered on the source completes ONLY via an action on the
-      // source's session. With target on the left, the fresh-table path
-      // (no touched-bucket scan) would leave inObs.get blocked forever
-      // under streaming. Union order cannot change the argmax: ties are
-      // broken by column values, and equal (key, lsn, _src) rows are
-      // identical payloads.
-      val result = source.withColumn(SrcCol, lit(true))
-        .unionByName(target.withColumn(SrcCol, lit(false)))
-        .withColumn(BucketCol, bucketExpr)
-        .withColumn(SaltCol, saltExpr)
-        .repartition(math.max(touched.size * saltBuckets, 1), col(BucketCol), col(SaltCol))
-        .withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1)
-        .select((col(SrcCol) +: col(BucketCol) +:
-          evolvedState.fields.map(f => col(f.name)).toIndexedSeq) :+
-          (col("op") === lit("D")).as(DeletedCol): _*)
-        .observe(outObs,
-          count(lit(1)).as("keys"),
-          sum(when(col(DeletedCol), 1L).otherwise(0L)).as("tombstones"),
-          sum(when(col(SrcCol) && prevHw.map(col("lsn") <= lit(_)).getOrElse(lit(false)),
-            1L).otherwise(0L)).as("late_wins"),
-          // written-bucket count for stats on the fresh-table path, where
-          // no touched-scan ran (approx ≡ exact at ≤ numBuckets values)
-          approx_count_distinct(col(BucketCol)).as("n_buckets"))
-        .drop(SrcCol)
+    // --- merge: per-key argmax by lsn, single exchange --------------------
+    // ONE shuffle serves both the merge and the file layout: we
+    // repartition explicitly on (bucket, salt) — bucket = f(repo),
+    // salt = g(path) — then take the lsn-argmax per key with a window
+    // over (bucket, salt, repo, path). Since the partitioning
+    // expressions are a subset of the window partition spec,
+    // EnsureRequirements recognizes the distribution as satisfied and
+    // plans the window WITHOUT a second exchange; each reducer task
+    // sorts its partition once and writes exactly its own bucket files.
+    // (Partitioning by the two derived columns doesn't change the
+    // argmax: (repo, path) determines both.) The window+sort form beats
+    // `groupBy.agg(max_by(struct(...)))` ~2× here: a struct-valued
+    // aggregation buffer forces the slow aggregate path, while the sort
+    // runs on flat UnsafeRows. The salt dimension keeps a hot repo's
+    // bucket spread over `saltBuckets` tasks/files.
+    val saltExpr = pmod(xxhash64(col("path")), lit(saltBuckets)).cast(IntegerType)
+    val outObs = Observation(s"merge-out-$epochId")
+    // Tie-break equal lsns toward the TARGET copy (an at-least-once
+    // redelivery ties with the identical already-applied row): the
+    // argmax output is unchanged either way, but it makes `_src` below
+    // a precise ordered-delivery detector — a SOURCE row can then only
+    // win at an lsn at or below the previous high-water mark if it is
+    // a genuinely NOVEL late event (redeliveries lose the tie), which
+    // is exactly the case that breaks incremental readers'
+    // `lsn > highWater` pruning (see Snapshot.unorderedCommits).
+    val SrcCol = "_src"
+    val prevHw = snapOpt.flatMap(_.highWaterLsn)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(BucketCol), col(SaltCol), col("repo"), col("path"))
+      .orderBy(col("lsn").desc, col(SrcCol).asc)
+    // SOURCE on the union's left: the combined Dataset (and therefore
+    // every action on it, including the write command below) binds to
+    // the left operand's SparkSession = the events dataframe's session.
+    // That is load-bearing for the Observations: inside foreachBatch the
+    // batch df lives on the stream's CLONED session, and Spark's
+    // ExecutionListenerBus delivers execution-end events only to the
+    // session that ran the action (sessionUUID filter) — an Observation
+    // registered on the source completes ONLY via an action on the
+    // source's session. With target on the left, the fresh-table path
+    // (no touched-bucket scan) would leave inObs.get blocked forever
+    // under streaming. Union order cannot change the argmax: ties are
+    // broken by column values, and equal (key, lsn, _src) rows are
+    // identical payloads.
+    val result = source.withColumn(SrcCol, lit(true))
+      .unionByName(target.withColumn(SrcCol, lit(false)))
+      .withColumn(BucketCol, bucketExpr)
+      .withColumn(SaltCol, saltExpr)
+      .repartition(math.max(touched.size * saltBuckets, 1), col(BucketCol), col(SaltCol))
+      .withColumn("_rn", row_number().over(w))
+      .where(col("_rn") === 1)
+      .select((col(SrcCol) +: col(BucketCol) +:
+        evolvedState.fields.map(f => col(f.name)).toIndexedSeq) :+
+        (col("op") === lit("D")).as(DeletedCol): _*)
+      .observe(outObs,
+        count(lit(1)).as("keys"),
+        sum(when(col(DeletedCol), 1L).otherwise(0L)).as("tombstones"),
+        sum(when(col(SrcCol) && prevHw.map(col("lsn") <= lit(_)).getOrElse(lit(false)),
+          1L).otherwise(0L)).as("late_wins"),
+        // written-bucket count for stats on the fresh-table path, where
+        // no touched-scan ran (approx ≡ exact at ≤ numBuckets values)
+        approx_count_distinct(col(BucketCol)).as("n_buckets"))
+      .drop(SrcCol)
 
-      // --- write touched buckets --------------------------------------------
-      // Unique writer-suffixed directory: data files never collide with a
-      // concurrent writer racing toward the same version — the loser's
-      // commitSnapshot rename fails AFTER writing only its own orphan dir
-      // (cleaned by Maintenance.vacuum), never after clobbering committed
-      // data. A crashed write before commit leaves the same harmless orphan.
-      val newVersion = snapOpt.map(_.version + 1).getOrElse(0L)
-      val writeDir = s"v$newVersion-${java.util.UUID.randomUUID().toString.take(8)}"
-      val outDir = s"${table.root}/data/$writeDir"
-      timed("write")(result
-        .write
-        .mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy(BucketCol)
-        .parquet(outDir))
+    // --- write touched buckets --------------------------------------------
+    // Unique writer-suffixed directory: data files never collide with a
+    // concurrent writer racing toward the same version — the loser's
+    // commitSnapshot rename fails AFTER writing only its own orphan dir
+    // (cleaned by Maintenance.vacuum), never after clobbering committed
+    // data. A crashed write before commit leaves the same harmless orphan.
+    val newVersion = snapOpt.map(_.version + 1).getOrElse(0L)
+    val writeDir = s"v$newVersion-${java.util.UUID.randomUUID().toString.take(8)}"
+    val outDir = s"${table.root}/data/$writeDir"
+    timed("write")(result
+      .write
+      .mode("overwrite")
+      .option("compression", "zstd")
+      .partitionBy(BucketCol)
+      .parquet(outDir))
 
-      // the write (or, on incremental epochs, the earlier touched scan)
-      // evaluated the observed plan, so the quarantine count is known; the
-      // rows themselves are persisted only AFTER the commit succeeds
-      // (below) — a commit-conflict retry of this epoch would otherwise
-      // re-append the same poison rows every attempt
-      val nQuarantined = asLong(inObs.get, "n_bad")
+    // the write (or, on incremental epochs, the earlier touched scan)
+    // evaluated the observed plan, so the quarantine count is known; the
+    // rows themselves are persisted only AFTER the commit succeeds
+    // (below) — a commit-conflict retry of this epoch would otherwise
+    // re-append the same poison rows every attempt
+    val nQuarantined = asLong(inObs.get, "n_bad")
 
-      // --- commit -----------------------------------------------------------
-      // Per-file (min_lsn, max_lsn, n_rows) come from the parquet footers
-      // (metadata-only IO); the manifest records them so readers prune
-      // sub-bucket, and the snapshot's high-water lsn advances iff every
-      // file has stats (ordered-log delivery makes rows with
-      // lsn <= highWater provably unchanged in later snapshots).
-      val newFiles = timed("list")(table.listDataFilesWithStats(writeDir))
-      val statsOk = newFiles.forall(_.hasStats)
-      // Ordered-log delivery check: a NOVEL source row won its key at an
-      // lsn at or below the previous high-water mark — out-of-global-
-      // order first delivery (e.g. a streaming source splitting one log
-      // batch across micro-batches). Pure redeliveries do NOT trip this
-      // (they lose the argmax tie to the target copy above). The merge
-      // itself is order-independent (lsn argmax), but incremental
-      // readers' `lsn > highWater` fast path is only sound across
-      // ordered commits — so violations are counted cumulatively and
-      // readers compare endpoint counters (see Snapshot scaladoc).
-      val lateWins = asLong(outObs.get, "late_wins") > 0L
-      val srcMinLsn = asLong(inObs.get, "min_lsn")
+    // --- commit -----------------------------------------------------------
+    // Per-file (min_lsn, max_lsn, n_rows) come from the parquet footers
+    // (metadata-only IO); the manifest records them so readers prune
+    // sub-bucket, and the snapshot's high-water lsn advances iff every
+    // file has stats (ordered-log delivery makes rows with
+    // lsn <= highWater provably unchanged in later snapshots).
+    val newFiles = timed("list")(table.listDataFilesWithStats(writeDir))
+    val statsOk = newFiles.forall(_.hasStats)
+    // Ordered-log delivery check: a NOVEL source row won its key at an
+    // lsn at or below the previous high-water mark — out-of-global-
+    // order first delivery (e.g. a streaming source splitting one log
+    // batch across micro-batches). Pure redeliveries do NOT trip this
+    // (they lose the argmax tie to the target copy above). The merge
+    // itself is order-independent (lsn argmax), but incremental
+    // readers' `lsn > highWater` fast path is only sound across
+    // ordered commits — so violations are counted cumulatively and
+    // readers compare endpoint counters (see Snapshot scaladoc).
+    val lateWins = asLong(outObs.get, "late_wins") > 0L
+    val srcMinLsn = asLong(inObs.get, "min_lsn")
 
-      // Commit, with METADATA-ONLY rebase on conflict: if the concurrent
-      // winner left our touched buckets' files and the schema untouched,
-      // the data files we already wrote are exactly what a re-merge
-      // against the winner would produce — so rebuild only the snapshot
-      // metadata on its head and retry the rename. Writers on DISJOINT
-      // buckets therefore never recompute (the Iceberg-style rebase);
-      // anything else rethrows to apply()'s full-recompute loop.
-      var base = snapOpt
-      var baseIsOriginal = true
-      var committedVersion = -1L
-      var skippedStats: Option[MergeStats] = None
-      while (committedVersion < 0L && skippedStats.isEmpty) {
-        val commitVersion = base.map(_.version + 1).getOrElse(0L)
-        val newHighWater: Option[Long] = base match {
-          case None =>
-            if (statsOk) Some(newFiles.map(_.maxLsn).foldLeft(Long.MinValue)(math.max))
-            else None
-          case Some(s) => s.highWaterLsn match {
-            case Some(hw) if statsOk =>
-              Some(newFiles.map(_.maxLsn).foldLeft(hw)(math.max))
-            // a catalog-created EMPTY table has no mark yet; the first data
-            // commit initializes it exactly like a fresh table would
-            case None if statsOk && s.allFiles.isEmpty =>
-              Some(newFiles.map(_.maxLsn).foldLeft(Long.MinValue)(math.max))
-            case _ => None
-          }
-        }
-        val filesRef = base
-          .map(s => table.successorFiles(s, touched, newFiles))
-          .getOrElse(InlineFiles(newFiles))
-        val schemaVersion = base.map { s =>
-          if (s.schema == physicalSchema) s.schemaVersion else s.schemaVersion + 1
-        }.getOrElse(1)
-        // against the ORIGINAL base the late-win observation is exact;
-        // after a rebase the mark may have advanced past some of our
-        // lsns, so fall back to the conservative source-min test (a false
-        // positive only costs readers their hw pruning on this range,
-        // never soundness)
-        val unordered =
-          if (baseIsOriginal) lateWins
-          else lateWins || base.flatMap(_.highWaterLsn).exists(srcMinLsn <= _)
-        try {
-          table.commitSnapshot(Snapshot(
-            version = commitVersion,
-            schemaVersion = schemaVersion,
-            schema = physicalSchema,
-            numBuckets = numBuckets,
-            epochs = base.map(_.epochs).getOrElse(Set.empty) + epochId,
-            filesRef = filesRef,
-            highWaterLsn = newHighWater,
-            unorderedCommits = base.map(_.unorderedCommits).getOrElse(0L) +
-              (if (unordered) 1L else 0L)
-          ))
-          committedVersion = commitVersion
-        } catch {
-          case e: graft.lake.CommitConflictException =>
-            val cur = table.currentSnapshot().getOrElse(throw e)
-            if (cur.epochs.contains(epochId)) {
-              // our own epoch landed concurrently (a speculative retry of
-              // one logical writer): degrade to a ledger skip
-              skippedStats = Some(MergeStats(epochId, cur.version, skipped = true,
-                0, 0, 0, 0, 0, 0, (System.nanoTime() - t0) / 1000000))
-            } else {
-              val fastOk = snapOpt.isDefined &&
-                cur.numBuckets == numBuckets &&
-                cur.schema == snapOpt.get.schema &&
-                cur.filesIn(touched).map(_.relPath).toSet ==
-                  targetFiles.map(_.relPath).toSet
-              if (!fastOk) throw e
-              base = Some(cur)
-              baseIsOriginal = false
-            }
-        }
-      }
-      skippedStats match {
-        case Some(sk) => sk
+    // Commit, with METADATA-ONLY rebase on conflict: if the concurrent
+    // winner left our touched buckets' files and the schema untouched,
+    // the data files we already wrote are exactly what a re-merge
+    // against the winner would produce — so rebuild only the snapshot
+    // metadata on its head and retry the rename. Writers on DISJOINT
+    // buckets therefore never recompute (the Iceberg-style rebase);
+    // anything else rethrows to apply()'s full-recompute loop.
+    var base = snapOpt
+    var baseIsOriginal = true
+    var committedVersion = -1L
+    var skippedStats: Option[MergeStats] = None
+    while (committedVersion < 0L && skippedStats.isEmpty) {
+      val commitVersion = base.map(_.version + 1).getOrElse(0L)
+      val newHighWater: Option[Long] = base match {
         case None =>
-          // persist quarantined rows exactly once, post-commit (JSONL:
-          // schema-tolerant across evolving event schemas) — replay after
-          // upstream repair is `spark.read.json(...)` → merge.apply. A
-          // crash in the gap loses only the quarantine COPY (the metrics
-          // row below shares that durability class), never state; a
-          // conflict-retried attempt rethrows before reaching here, so
-          // retries cannot duplicate the rows. repartition(1): atomicAppend
-          // renames part files one by one, so a single part makes the
-          // epoch's quarantine all-or-nothing under a mid-loop crash
-          // (quarantine volume is poison rows — small by construction).
-          // repartition, NOT coalesce: `aligned` is uncached by default,
-          // and coalesce(1) would fold its whole source re-parse into one
-          // task; the shuffle barrier keeps the scan+filter parallel.
-          if (nQuarantined > 0 && recordMeta)
-            Meta.atomicAppend(table,
-              aligned.where(badCond).withColumn("_epoch", lit(epochId)).repartition(1),
-              s"${table.root}/meta/quarantine", "json")
-          val stats = MergeStats(epochId, committedVersion, skipped = false,
-            eventsIn = asLong(inObs.get, "n"),
-            eventsQuarantined = nQuarantined,
-            approxDistinctLsn = asLong(inObs.get, "n_lsn"),
-            keysWritten = asLong(outObs.get, "keys"),
-            tombstonesWritten = asLong(outObs.get, "tombstones"),
-            bucketsTouched =
-              if (snapOpt.isEmpty) asLong(outObs.get, "n_buckets").toInt else touched.size,
-            durationMs = (System.nanoTime() - t0) / 1000000)
-          if (recordMeta) Meta.record(table, stats, committedVersion, epochId, newFiles)
-          stats
+          if (statsOk) Some(newFiles.map(_.maxLsn).foldLeft(Long.MinValue)(math.max))
+          else None
+        case Some(s) => s.highWaterLsn match {
+          case Some(hw) if statsOk =>
+            Some(newFiles.map(_.maxLsn).foldLeft(hw)(math.max))
+          // a catalog-created EMPTY table has no mark yet; the first data
+          // commit initializes it exactly like a fresh table would
+          case None if statsOk && s.allFiles.isEmpty =>
+            Some(newFiles.map(_.maxLsn).foldLeft(Long.MinValue)(math.max))
+          case _ => None
+        }
       }
-    } finally {
-      if (cacheSource) source.unpersist(blocking = false): Unit
+      val filesRef = base
+        .map(s => table.successorFiles(s, touched, newFiles))
+        .getOrElse(InlineFiles(newFiles))
+      val schemaVersion = base.map { s =>
+        if (s.schema == physicalSchema) s.schemaVersion else s.schemaVersion + 1
+      }.getOrElse(1)
+      // against the ORIGINAL base the late-win observation is exact;
+      // after a rebase the mark may have advanced past some of our
+      // lsns, so fall back to the conservative source-min test (a false
+      // positive only costs readers their hw pruning on this range,
+      // never soundness)
+      val unordered =
+        if (baseIsOriginal) lateWins
+        else lateWins || base.flatMap(_.highWaterLsn).exists(srcMinLsn <= _)
+      try {
+        table.commitSnapshot(Snapshot(
+          version = commitVersion,
+          schemaVersion = schemaVersion,
+          schema = physicalSchema,
+          numBuckets = numBuckets,
+          epochs = base.map(_.epochs).getOrElse(Set.empty) + epochId,
+          filesRef = filesRef,
+          highWaterLsn = newHighWater,
+          unorderedCommits = base.map(_.unorderedCommits).getOrElse(0L) +
+            (if (unordered) 1L else 0L)
+        ))
+        committedVersion = commitVersion
+      } catch {
+        case e: graft.lake.CommitConflictException =>
+          val cur = table.currentSnapshot().getOrElse(throw e)
+          if (cur.epochs.contains(epochId)) {
+            // our own epoch landed concurrently (a speculative retry of
+            // one logical writer): degrade to a ledger skip
+            skippedStats = Some(MergeStats(epochId, cur.version, skipped = true,
+              0, 0, 0, 0, 0, 0, (System.nanoTime() - t0) / 1000000))
+          } else {
+            val fastOk = snapOpt.isDefined &&
+              cur.numBuckets == numBuckets &&
+              cur.schema == snapOpt.get.schema &&
+              cur.filesIn(touched).map(_.relPath).toSet ==
+                targetFiles.map(_.relPath).toSet
+            if (!fastOk) throw e
+            base = Some(cur)
+            baseIsOriginal = false
+          }
+      }
+    }
+    skippedStats match {
+      case Some(sk) => sk
+      case None =>
+        // persist quarantined rows exactly once, post-commit (JSONL:
+        // schema-tolerant across evolving event schemas) — replay after
+        // upstream repair is `spark.read.json(...)` → merge.apply. A
+        // crash in the gap loses only the quarantine COPY (the metrics
+        // row below shares that durability class), never state; a
+        // conflict-retried attempt rethrows before reaching here, so
+        // retries cannot duplicate the rows. repartition(1): atomicAppend
+        // renames part files one by one, so a single part makes the
+        // epoch's quarantine all-or-nothing under a mid-loop crash
+        // (quarantine volume is poison rows — small by construction).
+        // repartition, NOT coalesce: `aligned` is uncached by default,
+        // and coalesce(1) would fold its whole source re-parse into one
+        // task; the shuffle barrier keeps the scan+filter parallel.
+        if (nQuarantined > 0 && recordMeta)
+          Meta.atomicAppend(table,
+            aligned.where(badCond).withColumn("_epoch", lit(epochId)).repartition(1),
+            s"${table.root}/meta/quarantine", "json")
+        val stats = MergeStats(epochId, committedVersion, skipped = false,
+          eventsIn = asLong(inObs.get, "n"),
+          eventsQuarantined = nQuarantined,
+          approxDistinctLsn = asLong(inObs.get, "n_lsn"),
+          keysWritten = asLong(outObs.get, "keys"),
+          tombstonesWritten = asLong(outObs.get, "tombstones"),
+          bucketsTouched =
+            if (snapOpt.isEmpty) asLong(outObs.get, "n_buckets").toInt else touched.size,
+          durationMs = (System.nanoTime() - t0) / 1000000)
+        if (recordMeta) Meta.record(table, stats, committedVersion, epochId, newFiles)
+        stats
     }
   }
 }

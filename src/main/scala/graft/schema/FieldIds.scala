@@ -85,4 +85,35 @@ object FieldIds {
   def aliasMap(schema: StructType): Map[String, Seq[String]] =
     schema.fields.iterator.filter(f => aliases(f).nonEmpty)
       .map(f => f.name -> aliases(f)).toMap
+
+  /** The name a file stores `column` under: the column's own name when the
+    * file holds it, else the first of its other names (`eras`, e.g.
+    * [[aliasMap]]) the file holds — a file holds at most one of a field's
+    * names. A column the file holds under none keeps its own name and
+    * reads as null (the tolerant reader). */
+  def storedName(column: String, eras: Map[String, Seq[String]],
+                 fileHolds: String => Boolean): String =
+    if (fileHolds(column)) column
+    else eras.getOrElse(column, Nil).find(fileHolds).getOrElse(column)
+
+  /** Eras for a reader whose column names are pinned to `pinned` (a
+    * stream's schema at its start) while it reads files up to `end`: each
+    * pinned column → every other name its field id carries in `end`
+    * (current, then former). Id-less fields keep their own aliases. A
+    * pinned id missing from `end` fails loudly — reading on would emit
+    * nulls where the files hold values. */
+  def pinnedAliases(pinned: StructType, end: StructType): Map[String, Seq[String]] = {
+    val byId = end.fields.flatMap(f => id(f).map(_ -> f)).toMap
+    pinned.fields.iterator.map { f =>
+      val names = id(f) match {
+        case Some(i) =>
+          val now = byId.getOrElse(i, throw new IllegalStateException(
+            s"column ${f.name} (field id $i) is missing from the schema being read; " +
+              "the stream cannot resolve it"))
+          now.name +: aliases(now)
+        case None => aliases(f)
+      }
+      f.name -> names.filterNot(_ == f.name)
+    }.filter(_._2.nonEmpty).toMap
+  }
 }

@@ -600,7 +600,7 @@ class Dsv2Spec extends AnyFunSuite {
     assert(e.getMessage.contains("maxSplitBytes must be positive"))
   }
 
-  // ----- columnar (vectorized) read path --------------------------------
+  // ----- the vectorized read path ---------------------------------------
 
   /** A ColumnarToRow whose subtree holds the BatchScan (whole-stage codegen
     * interposes an InputAdapter between them, invisible in treeString). */
@@ -618,10 +618,10 @@ class Dsv2Spec extends AnyFunSuite {
     val table = build()
     val columnar = spark.read.format("graft").load(table.root)
     assert(isColumnarScan(columnar), "whole-state scan did not plan columnar")
-    val row = spark.read.format("graft").option("columnar", "false").load(table.root)
-    assert(!isColumnarScan(row), "columnar=false still planned columnar")
-    assert(canon(columnar) == canon(row))
-    assert(columnar.count() == row.count())
+    // reference: Spark's native parquet scan (LakeTable.readFiles)
+    val ref = table.read()
+    assert(canon(columnar) == canon(ref))
+    assert(columnar.count() == ref.count())
   }
 
   test("columnar path filters tombstones via the selection wrapper (mixed batches)") {
@@ -641,15 +641,15 @@ class Dsv2Spec extends AnyFunSuite {
     }.toDF("lsn", "op", "ts", "repo", "path", "commit", "lang", "content")
     merge.apply(dels, 779L)
     val columnar = spark.read.format("graft").load(table.root)
-    val row = spark.read.format("graft").option("columnar", "false").load(table.root)
-    assert(isColumnarScan(columnar) && !isColumnarScan(row))
-    assert(canon(columnar) == canon(row))
+    val ref = table.read()
+    assert(isColumnarScan(columnar))
+    assert(canon(columnar) == canon(ref))
     val gone = victims.toSet
     assert(columnar.select("repo", "path").collect()
       .forall(r => !gone((r.getString(0), r.getString(1)))))
     // projections and aggregates over the selected batches stay exact
     assert(columnar.agg(sum(length(col("content")))).head.getLong(0) ==
-      row.agg(sum(length(col("content")))).head.getLong(0))
+      ref.agg(sum(length(col("content")))).head.getLong(0))
   }
 
   test("columnar path: includeTombstones, schema evolution, byte-range splits") {
@@ -667,45 +667,133 @@ class Dsv2Spec extends AnyFunSuite {
       "body", "MIT")).toDF("lsn", "op", "ts", "repo", "path", "commit", "lang",
       "content", "license"), 781L)
 
-    def both(opts: Map[String, String]): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) = {
-      def rd(extra: (String, String)*) = {
-        var r = spark.read.format("graft")
-        (opts ++ extra).foreach { case (k, v) => r = r.option(k, v) }
-        r.load(table.root)
-      }
-      (rd(), rd("columnar" -> "false"))
+    def rd(opts: (String, String)*) = {
+      var r = spark.read.format("graft")
+      opts.foreach { case (k, v) => r = r.option(k, v) }
+      r.load(table.root)
+    }
+    // references: Spark's native parquet scan (LakeTable.readFiles), raw
+    // rows with tombstones and the visible state
+    def raw = {
+      val snap = table.currentSnapshot().get
+      table.readFiles(snap.schema, snap.allFiles)
     }
     // tombstones surfaced: no filtering, `_deleted` is ordinary data
-    val (ct, rt) = both(Map("includeTombstones" -> "true"))
+    val ct = rd("includeTombstones" -> "true")
     assert(isColumnarScan(ct))
     assert(ct.where(col(LakeTable.DeletedCol)).count() > 0)
-    assert(canon(ct.drop(LakeTable.DeletedCol)) == canon(rt.drop(LakeTable.DeletedCol)))
-    // evolution: null-filled license column agrees with the row path
-    val (ce, re) = both(Map.empty)
+    assert(canon(ct) == canon(raw))
+    // evolution: the null-filled license column agrees with the native scan
+    val ce = rd()
     assert(ce.where(col("license").isNull).count() ==
-      re.where(col("license").isNull).count())
-    assert(canon(ce) == canon(re))
+      table.read().where(col("license").isNull).count())
+    assert(canon(ce) == canon(table.read()))
     // byte-range splits keep the vectorized path and read each row once
     assert(Maintenance.compact(table, maxFilesPerBucket = 1) > 0)
-    val (cs, rs) = both(Map("maxSplitBytes" -> "4096"))
+    val cs = rd("maxSplitBytes" -> "4096")
     assert(isColumnarScan(cs))
-    assert(canon(cs) == canon(rs))
+    assert(canon(cs) == canon(table.read()))
   }
 
-  test("lsn-bounded and point-lookup scans stay on the row reader (pushed filters)") {
+  test("lsn-bounded and point-lookup scans plan columnar and keep their pushed filters") {
     val table = build()
-    val repo = table.read().select("repo").limit(1).collect().head.getString(0)
-    assert(!isColumnarScan(
-      spark.read.format("graft").load(table.root).where(col("repo") === repo)))
-    assert(!isColumnarScan(
-      spark.read.format("graft").load(table.root).where(col("lsn") > 5L)))
-    // changesFrom (batch CDC) carries a row bound → row path
-    val v = table.currentSnapshot().get.version
-    if (v > 0) {
-      assert(!isColumnarScan(spark.read.format("graft")
-        .option("changesFrom", "0").load(table.root)))
+    val key = table.read().select("repo", "path").limit(1).collect().head
+    val (repo, path) = (key.getString(0), key.getString(1))
+    def columnarWith(df: org.apache.spark.sql.DataFrame, pushed: String): Unit = {
+      assert(isColumnarScan(df), df.queryExecution.executedPlan.toString)
+      val desc = df.queryExecution.executedPlan.toString
+      assert(desc.contains(pushed), desc)
     }
+    columnarWith(spark.read.format("graft").load(table.root).where(col("repo") === repo),
+      s"keyFilter=repo=$repo ")
+    columnarWith(spark.read.format("graft").load(table.root)
+      .where(col("repo") === repo && col("path") === path),
+      s"keyFilter=repo=$repo&path=$path ")
+    columnarWith(spark.read.format("graft").load(table.root).where(col("lsn") > 5L),
+      "lsnAbove=5 ")
+    // changesFrom (batch CDC) carries the range's row bound
+    val v = table.currentSnapshot().get.version
+    assert(v > 0)
+    val hw0 = table.snapshotAt(0L).highWaterLsn.get
+    columnarWith(spark.read.format("graft").option("changesFrom", "0").load(table.root),
+      s"lsnAbove=$hw0 ")
+  }
+
+  test("point lookups skip row groups inside the vectorized reader (task bytes read)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerTaskEnd}
+    // this test's own session: a small row-group size, so the table's one
+    // bucket file holds many row groups. Rows carry ~800 incompressible
+    // bytes so each row group outweighs the 64 KB read buffer of a local
+    // file — a skipped row group is then bytes not read.
+    val s = spark.newSession()
+    s.conf.set("parquet.block.size", "65536")
+    // synchronous reads: vectored reads complete off the task thread, where
+    // the per-thread Hadoop byte counters behind bytesRead miss them
+    s.conf.set("parquet.hadoop.vectored.io.enabled", "false")
+    import s.implicits._
+    val table = new LakeTable(s, TestSpark.tmpDir("dsv2rowgroups") + "/table")
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
+    val events = (0 until 4000).map { i =>
+      (i.toLong, "I", ts, f"org/repo-${i % 40}%02d", f"src/f$i%04d.txt", "c", "text",
+        new scala.util.Random(i).alphanumeric.take(800).mkString)
+    }.toDF("lsn", "op", "ts", "repo", "path", "commit", "lang", "content")
+    new MergeInto(table, numBuckets = 1, saltBuckets = 1, recordMeta = false)
+      .apply(events, epochId = 0L): Unit
+    val files = table.currentSnapshot().get.allFiles
+    assert(files.size == 1)
+    val file = files.head
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"${table.root}/${file.relPath}"),
+        s.sparkContext.hadoopConfiguration))
+    val rowGroups = try footer.getRowGroups.size finally footer.close()
+    assert(rowGroups >= 8, s"expected several row groups, got $rowGroups")
+
+    val (repo, path) = ("org/repo-17", "src/f2017.txt")
+    val lookup = s.read.format("graft").load(table.root)
+      .where(col("repo") === repo && col("path") === path)
+    assert(isColumnarScan(lookup))
+
+    // sum task bytesRead over the lookup's jobs (job group filter isolates
+    // it from anything else on the shared context)
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .contains("dsv2rowgroups")) {
+          js.stageIds.foreach(stages.add)
+          jobs.add(js.jobId): Unit
+        }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId) && te.taskMetrics != null)
+          bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead): Unit
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (jobs.contains(je.jobId)) ended.add(je.jobId): Unit
+    }
+    s.sparkContext.addSparkListener(listener)
+    val got = try {
+      s.sparkContext.setJobGroup("dsv2rowgroups", "point lookup")
+      val rows = lookup.collect().map(_.toString).toSeq
+      s.sparkContext.clearJobGroup()
+      // listener delivery is async; task ends precede their job's end
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (System.nanoTime() < deadline && (jobs.isEmpty || ended.size < jobs.size))
+        Thread.sleep(50)
+      rows
+    } finally {
+      s.sparkContext.removeSparkListener(listener)
+      s.sparkContext.clearJobGroup()
+    }
+    assert(!jobs.isEmpty && ended.size == jobs.size, "lookup jobs never finished")
+    assert(bytesRead.get > 0L && bytesRead.get < file.nBytes / 4,
+      s"lookup read ${bytesRead.get} of ${file.nBytes} bytes ($rowGroups row groups)")
+    val want = table.read().where(col("repo") === repo && col("path") === path)
+      .collect().map(_.toString).toSeq
+    assert(got == want && got.size == 1)
   }
 
   test("compaction + stats keep DSv2 lsn-pruned reads empty of data IO") {
@@ -875,7 +963,7 @@ class Dsv2Spec extends AnyFunSuite {
     assert(FieldIds.aliases(snapRn.schema("rating")) == Seq("stars"))
 
     // pre-rename files answer under the NEW name (alias-era resolution) —
-    // whole-state scan (columnar path) and key point-lookup (row path)
+    // whole-state scan and key point-lookup (pushed predicates)
     assert(spark.sql("SELECT rating FROM graft_rn.db.t ORDER BY repo")
       .collect().map(_.getInt(0)).toSeq == Seq(10, 20))
     assert(spark.sql("SELECT rating FROM graft_rn.db.t WHERE repo = 'r2' AND path = 'b'")
@@ -930,6 +1018,25 @@ class Dsv2Spec extends AnyFunSuite {
     assert(spark.sql("SELECT repo, stars FROM graft_rn.db.t ORDER BY repo")
       .collect().map(r => (r.getString(0), r.getInt(1))).toSeq ==
       Seq(("r1", 11), ("r2", 20)))
+  }
+
+  test("RENAME and ADD reserve names case-insensitively (spark.sql.caseSensitive off)") {
+    val wh = TestSpark.tmpDir("dsv2renameci")
+    spark.conf.set("spark.sql.catalog.graft_rci",
+      classOf[graft.lake.dsv2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_rci.warehouse", wh)
+    spark.sql("CREATE TABLE graft_rci.db.t (lsn BIGINT, repo STRING, path STRING, " +
+      "x INT, foo INT) TBLPROPERTIES ('buckets'='2')")
+    val t = new LakeTable(spark, s"$wh/db/t")
+    // `foo` live
+    intercept[Exception](spark.sql("ALTER TABLE graft_rci.db.t RENAME COLUMN x TO FOO"))
+    // `foo` a former name
+    spark.sql("ALTER TABLE graft_rci.db.t RENAME COLUMN foo TO bar")
+    val v = t.currentSnapshot().get.version
+    intercept[Exception](spark.sql("ALTER TABLE graft_rci.db.t RENAME COLUMN x TO FOO"))
+    intercept[Exception](spark.sql("ALTER TABLE graft_rci.db.t ADD COLUMN Foo INT"))
+    assert(t.currentSnapshot().get.version == v)
+    assert(t.currentSnapshot().get.schema.fieldNames.toSeq.contains("x"))
   }
 
   test("SQL-only training pipeline: ingest -> dedup -> sample -> pack via CALL") {
@@ -1385,6 +1492,38 @@ class Dsv2Spec extends AnyFunSuite {
       .start()
     q.awaitTermination()
     assert(spark.read.parquet(out).count() == 2)
+  }
+
+  test("streaming: a RENAME COLUMN committed mid-stream keeps the pinned column's values") {
+    val wh = TestSpark.tmpDir("dsv2streamrename")
+    spark.conf.set("spark.sql.catalog.graft_srn",
+      classOf[graft.lake.dsv2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_srn.warehouse", wh)
+    spark.sql("CREATE TABLE graft_srn.db.t (lsn BIGINT, repo STRING, path STRING, " +
+      "stars INT) TBLPROPERTIES ('buckets'='2')")
+    spark.sql("INSERT INTO graft_srn.db.t VALUES (1, 'r1', 'a', 10)")
+    val q = spark.readStream.format("graft").load(s"$wh/db/t")
+      .writeStream.format("memory").queryName("graft_srn_out")
+      .option("checkpointLocation", s"$wh/cp")
+      .start()
+    try {
+      q.processAllAvailable()
+      // the stream's names stay pinned (`stars`); files committed after
+      // the rename store the column as `rating`
+      spark.sql("ALTER TABLE graft_srn.db.t RENAME COLUMN stars TO rating")
+      spark.sql("INSERT INTO graft_srn.db.t VALUES (2, 'r2', 'b', 20)")
+      q.processAllAvailable()
+      val got = spark.table("graft_srn_out").select("repo", "stars").collect()
+        .map(r => (r.getString(0), r.get(1))).toSet
+      assert(got == Set(("r1", 10), ("r2", 20)))
+    } finally q.stop()
+
+    // a pinned field id the read schema lacks fails loudly, never reads null
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val pinned = StructType(Seq(
+      graft.schema.FieldIds.withId(StructField("stars", IntegerType), 7L)))
+    intercept[IllegalStateException](
+      graft.schema.FieldIds.pinnedAliases(pinned, new StructType()))
   }
 
   // -------------------------------------------------------------------
