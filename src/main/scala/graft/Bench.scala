@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.BenchCdc.pairedExcludedJson
-
 /** Benchmark main (driver contract). Prints ONE JSON line:
   * {"metric":"total","value":<query secs>,"unit":"sec","queries":{...},
   *  "cdc":{...two-cluster-size scaling protocol results...},"sf":...}
@@ -11,10 +9,13 @@ import graft.BenchCdc.pairedExcludedJson
   * Part 1 times every operator-demo query on SPARK_GRAFT_SF_DIR.
   * Part 2 runs BenchCdc's scaling protocol (see BenchCdc's scaladoc and
   * BASELINE.md): the same seeded change log replayed in taskset-pinned
-  * child JVMs at N and 4N cores, interleaved best-of-reps, reporting
-  * events/sec at both and efficiency = (tput_4N / tput_N) / 4.
-  * Part 3 replays the same log as SPARK_GRAFT_BENCH_EPOCHS incremental
-  * epochs (default 8; 0 or 1 skips it).
+  * stepping child JVMs at N and 4N cores, interleaved reps, reporting
+  * events/sec at both legs' fastest reps and one efficiency,
+  * `scaling_efficiency` = (tput_4N / tput_N) / 4 over those floors, with
+  * `certified` (both floor reps kernel-clean) and `superlinear` (> 1.0)
+  * beside it and every raw rep, in [[BenchCdc.ScalingResult.json]]'s
+  * shape. Part 3 replays the same log as SPARK_GRAFT_BENCH_EPOCHS
+  * incremental epochs (default 8; 0 or 1 skips it), same shape.
   *
   * Space: the logs live under SPARK_GRAFT_BENCH_WORK (default `/dev/shm`,
   * tmpfs). Part 2's 8M-event log takes ~4 GB and part 3 caches its own
@@ -73,31 +74,8 @@ object Bench {
     }
 
     // ---- part 2: CDC replay scaling protocol ---------------------------
-    def cdcJson(r: BenchCdc.ScalingResult, extra: String = ""): String = {
-      val (nC, mC) = (r.nCores, r.mCores)
-      val e = r.est
-      // rep_secs keeps its historical [[cores, secs], ...] shape; "reps"
-      // adds the kernel-measured external load (ext_cores, -1 = unknown)
-      // and the interleaved round each sample belongs to
-      val repsJson = r.reps.map(x => f"""[${x.cores},${x.secs}%.2f]""").mkString("[", ",", "]")
-      val repsFull = r.reps.map(x =>
-        f"""{"cores":${x.cores},"secs":${x.secs}%.2f,"ext_cores":${x.extCores}%.2f,"round":${x.round}}""")
-        .mkString("[", ",", "]")
-      def opt(v: Option[Double]) = v.map(d => f"$d%.3f").getOrElse("null")
-      f"""{$extra"events":${r.nEvents},"n_cores":$nC,"secs_n":${e.minSecs(nC)}%.2f,""" +
-        f""""events_per_sec_n":${r.throughput(nC)},"n4_cores":$mC,"secs_4n":${e.minSecs(mC)}%.2f,""" +
-        f""""events_per_sec_4n":${r.throughput(mC)},"scaling_efficiency":${e.headline}%.3f,""" +
-        f""""efficiency_min_of_k":${e.effMinOfK}%.3f,"efficiency_clean":${opt(e.effClean)},""" +
-        f""""efficiency_paired_median":${opt(e.effPairedMedian)},""" +
-        f""""efficiency_paired_best":${opt(e.effPairedBest)},""" +
-        // rounds the numerator guard dropped, WITH their measured ratios —
-        // the guard bounds inflation but can exclude an honest round at the
-        // cutoff boundary; the reader sees what was measured either way
-        s""""paired_excluded":${pairedExcludedJson(e)},""" +
-        f""""final_rows":${r.rows},"rep_secs":$repsJson,"reps":$repsFull}"""
-    }
     val coreList = BenchCdc.coreListFromEnv()
-    val cdc = cdcJson(BenchCdc.runScaling(coreList))
+    val cdc = BenchCdc.runScaling(coreList).json
 
     // ---- part 3: INCREMENTAL (multi-epoch) replay scaling --------------
     // The production path is stage-resumable incremental epochs, not one
@@ -116,8 +94,7 @@ object Bench {
         val ri = BenchCdc.runScaling(coreList,
           budgetSecs = BenchCdc.envInt("SPARK_GRAFT_BENCH_BUDGET_INCR", 1200),
           nBatches = Some(epochs))
-        // echo the MEASURED (post-clamp) epoch count, not the request
-        s""","cdc_incremental":${cdcJson(ri, extra = s""""epochs":${ri.nBatches},""")}"""
+        s""","cdc_incremental":${ri.json}"""
       }
 
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"cdc":$cdc$cdcIncr,"sf":"$sfDir"}""")

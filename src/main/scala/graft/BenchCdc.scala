@@ -11,40 +11,33 @@ import org.apache.spark.sql.SparkSession
   * cores (and `-XX:ActiveProcessorCount=N`), because in a single unpinned
   * JVM a `local[2]` run borrows idle cores for GC/IO threads, silently
   * inflating the small-N baseline — a real cluster cgroup-binds executors,
-  * and the pinning emulates that. A child invocation warms up once (JIT)
-  * and then times SEVERAL replay reps back-to-back, so the marginal rep
-  * costs only the replay itself — extra samples are cheap, which is what
-  * noise robustness needs.
+  * and the pinning emulates that. There is one child protocol, the
+  * stepping child ([[childStepMain]]): it warms up once (JIT) and then runs
+  * one timed replay per request, so the marginal rep costs only the replay
+  * itself — extra samples are cheap, which is what noise robustness needs.
+  * When the two legs' pinned sets can be disjoint, one child per leg stays
+  * alive for the whole run; when they would overlap, each leg invocation
+  * spawns its child, draws a batch of reps and closes it, so children
+  * never coexist.
   *
   * Around every timed rep the child reads /proc/stat for its pinned CPU
   * set and reports the EXTERNAL load (other processes + hypervisor steal)
   * that ran on those cores during the rep — the kernel's own accounting of
   * measurement contamination. The parent feeds all reps into
-  * [[ScalingEstimator]] (min-of-K, kernel-certified clean-window min, and
-  * paired per-round estimators) and adaptively spends the time budget on
-  * the leg that most limits the estimate. See ScalingEstimator's scaladoc
-  * for why each estimator is honest under one-sided noise.
+  * [[ScalingEstimator]] (one min-of-K efficiency, flagged `certified` when
+  * both legs' floor reps are kernel-clean) and adaptively spends the time
+  * budget on the leg that blocks the estimate.
   *
   * Knobs (env): SPARK_GRAFT_BENCH_EVENTS (default 8M), _BATCHES (1),
-  * _BUCKETS (16), _SALT (4), _REPOS (2000), _PATHS (200),
-  * _REPS_N / _REPS_4N (reps per child invocation), _BUDGET (secs),
-  * SPARK_GRAFT_CORES_LIST ("2,8"), SPARK_GRAFT_BENCH_AQE, _WORK.
+  * _BUCKETS (16), _SALT (16), _REPOS (2000), _PATHS (200), _FORMAT (json),
+  * _REPS_N / _REPS_4N (draws per leg invocation), _REPS (max phase-1
+  * rounds), _BUDGET (secs), _REP_TIMEOUT (secs), _OFFHEAP, _WORK,
+  * SPARK_GRAFT_CORES_LIST ("2,8"), SPARK_GRAFT_CHILD_JVM_OPTS.
   */
 object BenchCdc {
-  implicit private class BuilderOps(b: SparkSession.Builder) {
-    def applyExtra(): SparkSession.Builder = {
-      sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach(_.split(';').filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k.trim, v.trim)
-      })
-      b
-    }
-  }
-
   def session(cpus: Int): SparkSession = {
     val s = Sessions.builder(s"graft-cdc-bench-$cpus", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "false"))
+      .config("spark.sql.adaptive.enabled", "false")
       // keep the shuffle at 2×cores partitions: AQE's size-based coalescing
       // would fold this medium shuffle into ~12 partitions and strand the
       // extra cores at 4N — parallelism matters more than partition size here
@@ -56,8 +49,6 @@ object BenchCdc {
       .config("spark.memory.offHeap.enabled",
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OFFHEAP", "true"))
       .config("spark.memory.offHeap.size", "6g")
-      // extra confs: "k=v;k=v" passthrough for experiments
-      .applyExtra()
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -87,10 +78,6 @@ object BenchCdc {
     def logDir = s"$work/log"
     def warmLogDir = s"$work/warmlog"
   }
-
-  /** The env-derived bench config, for the phase-decomposition probe
-    * (tools.ReplayProbe) — same knobs, same log. */
-  private[graft] def probeCfg: Cfg = cfgFromEnv
 
   private def cfgFromEnv = cfgForBatches(envInt("SPARK_GRAFT_BENCH_BATCHES", 1))
 
@@ -219,9 +206,9 @@ object BenchCdc {
   }
 
   /** The child's pinned cpu set: GRAFT_CHILD_CPUSET ("lo-hi") when the
-    * parent pinned it off the default 0..cpus-1 block (the stepped 2-core
-    * child runs on the TOP cores so the two persistent children never
-    * share a pinned set), else 0 until cpus. */
+    * parent pinned it off the default 0..cpus-1 block (the N-core child
+    * runs on the TOP cores so two persistent children never share a
+    * pinned set), else 0 until cpus. */
   private[graft] def pinnedSet(cpus: Int): Range =
     parseCpuset(sys.env.get("GRAFT_CHILD_CPUSET"), cpus)
 
@@ -233,27 +220,18 @@ object BenchCdc {
       case _ => 0 until cpus
     }
 
-  /** Child-JVM entry: JIT warmup on the small log, then `reps` timed
-    * replays back-to-back, one CHILD_REP line each. Runs pinned. */
-  def childMain(cpus: Int, reps: Int, cfg: Cfg): Unit = {
-    val spark = warmedSession(cpus, cfg)
-    // measure external load over the PINNED set (taskset binds this child
-    // to its cpu set, so all own CPU time lands there and subtracts
-    // cleanly) — matching ScalingEstimator.CleanExtCores' calibration. A
-    // whole-host reading would count co-tenants on far cores and make
-    // "clean" unobtainable on any shared box.
-    val pinned = pinnedSet(cpus)
-    val tableDir = s"${cfg.work}/table_$cpus"
-    try
-      (1 to reps).foreach { _ =>
-        val (secs, rows, ext, gc) = timedRep(spark, cfg, tableDir, pinned)
-        println(f"CHILD_REP $secs%.3f,$rows,$ext%.3f,$gc%.3f")
-      }
-    finally {
-      // the table lives on tmpfs (host RAM): clean even when a rep threw
-      rm(tableDir)
-      spark.stop()
-    }
+  /** The CHILD_REP wire line: written here, decoded by [[parseChildRep]]
+    * (and by tools/cluster_scaling.sh), nowhere else. */
+  private def printChildRep(r: (Double, Long, Double, Double)): Unit = {
+    println(f"CHILD_REP ${r._1}%.3f,${r._2},${r._3}%.3f,${r._4}%.3f")
+    System.out.flush()
+  }
+
+  /** One CHILD_REP wire line → (secs, rows, extCores, gcSecs). */
+  private def parseChildRep(l: String): (Double, Long, Double, Double) = {
+    val f = l.stripPrefix("CHILD_REP ").split(',')
+    (f(0).toDouble, f(1).toLong, f(2).toDouble,
+      if (f.length > 3) f(3).toDouble else -1.0)
   }
 
   /** Child with ADAPTIVE floor-hunting for environments where the parent
@@ -265,12 +243,12 @@ object BenchCdc {
     * consecutive reps — bounded by `maxReps` and `budgetSecs`. Early
     * (JIT-cold or noise-inflated) reps simply never become the minimum;
     * a degraded window buys more draws instead of sinking the leg.
-    * Prints the same CHILD_REP lines as the fixed-rep child. */
+    * Prints the same CHILD_REP lines as the stepping child. */
   def childAdaptMain(cpus: Int, minReps: Int, maxReps: Int, patience: Int,
                      budgetSecs: Long, cfg: Cfg): Unit = {
-    // unlike child/childstep (whose parent runScaling generates the log),
-    // adapt mode has no parent — a fresh box must not replay a MISSING
-    // log as a silent no-op (listBatches returns empty) and die on read
+    // unlike childstep (whose parent runScaling generates the log), adapt
+    // mode has no parent — a fresh box must not replay a MISSING log as a
+    // silent no-op (listBatches returns empty) and die on read
     ensureLogs(cfg)
     val spark = warmedSession(cpus, cfg)
     val pinned = pinnedSet(cpus)
@@ -282,12 +260,11 @@ object BenchCdc {
     try {
       var continue = true
       while (continue) {
-        val (secs, rows, ext, gc) = timedRep(spark, cfg, tableDir, pinned)
+        val rep = timedRep(spark, cfg, tableDir, pinned)
         n += 1
-        if (secs < best * 0.99) sinceImprove = 0 else sinceImprove += 1
-        best = math.min(best, secs)
-        println(f"CHILD_REP $secs%.3f,$rows,$ext%.3f,$gc%.3f")
-        System.out.flush()
+        if (rep._1 < best * 0.99) sinceImprove = 0 else sinceImprove += 1
+        best = math.min(best, rep._1)
+        printChildRep(rep)
         val elapsed = (System.nanoTime() - t0) / 1e9
         continue = n < maxReps && elapsed < budgetSecs &&
           !(n >= minReps && sinceImprove >= patience)
@@ -309,15 +286,16 @@ object BenchCdc {
     spark
   }
 
-  /** Persistent stepping child: warm up once, print CHILD_READY, then run
-    * ONE timed rep per "rep" line on stdin (CHILD_REP line each); any
-    * other line or EOF exits. Keeping the JVM alive makes the marginal
-    * draw cost the rep alone — no 30 s re-warm per sample — which is what
-    * lets the parent interleave the two legs at REP granularity: tight
-    * shared windows for the paired estimator, and 2-3× more floor-hunting
-    * draws for min-of-K inside the same budget. */
+  /** The stepping child: warm up once, print CHILD_READY, then run ONE
+    * timed rep per "rep" line on stdin (CHILD_REP line each); any other
+    * line or EOF exits. Keeping the JVM alive makes the marginal draw cost
+    * the rep alone — no 30 s re-warm per sample — so the budget buys 2-3×
+    * more floor-hunting draws for min-of-K. */
   def childStepMain(cpus: Int, cfg: Cfg): Unit = {
     val spark = warmedSession(cpus, cfg)
+    // external load is measured over the PINNED set (taskset binds this
+    // child to it, so all own CPU time lands there and subtracts cleanly)
+    // — matching ScalingEstimator.CleanExtCores' calibration
     val pinned = pinnedSet(cpus)
     val tableDir = s"${cfg.work}/table_${cpus}_step"
     println("CHILD_READY")
@@ -326,9 +304,7 @@ object BenchCdc {
     try {
       var line = in.readLine()
       while (line != null && line.trim == "rep") {
-        val (secs, rows, ext, gc) = timedRep(spark, cfg, tableDir, pinned)
-        println(f"CHILD_REP $secs%.3f,$rows,$ext%.3f,$gc%.3f")
-        System.out.flush()
+        printChildRep(timedRep(spark, cfg, tableDir, pinned))
         line = in.readLine()
       }
     } finally {
@@ -338,8 +314,8 @@ object BenchCdc {
     }
   }
 
-  /** The pinned-child command line (shared by the batch and stepping
-    * protocols): same JVM surface flags as this parent, taskset-pinned. */
+  /** The pinned-child command line: same JVM surface flags as this
+    * parent, taskset-pinned. */
   private def childCmd(cpus: Int, cpuset: String, args: Seq[String]): Seq[String] = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
@@ -359,11 +335,11 @@ object BenchCdc {
   private val RepTimeoutSecs: Long =
     envLong("SPARK_GRAFT_BENCH_REP_TIMEOUT", 900L)
 
-  /** A persistent pinned stepping child (see [[childStepMain]]): spawn +
-    * warm once, then each `step()` runs exactly one timed rep. `None` from
-    * step() means the child died — callers fall back to the batch path. */
+  /** A pinned stepping child (see [[childStepMain]]): spawn + warm once,
+    * then each `step()` runs exactly one timed rep. `None` from step()
+    * means the child died or wedged. */
   private final class SteppedChild(cpus: Int, cpuset: String,
-                                   extraEnv: Map[String, String] = Map.empty) {
+                                   extraEnv: Map[String, String]) {
     private val pb = new ProcessBuilder(
       childCmd(cpus, cpuset, Seq("childstep", cpus.toString)): _*)
     sys.env.foreach { case (k, v) => pb.environment().put(k, v) }
@@ -371,15 +347,23 @@ object BenchCdc {
     pb.environment().put("GRAFT_CHILD_CPUSET", cpuset)
     private val p = pb.start()
     // drain stderr (Spark INFO noise) so the child can never block on a
-    // full pipe
-    locally {
-      val t = new Thread(() => {
-        val buf = new Array[Byte](8192)
-        try { while (p.getErrorStream.read(buf) >= 0) () } catch { case _: Throwable => () }
-      })
-      t.setDaemon(true)
-      t.start()
-    }
+    // full pipe; keep its tail for the failure report
+    private val errTail = new java.lang.StringBuilder
+    private val drain = new Thread(() => {
+      val buf = new Array[Byte](8192)
+      try {
+        var n = p.getErrorStream.read(buf)
+        while (n >= 0) {
+          errTail.synchronized {
+            errTail.append(new String(buf, 0, n, java.nio.charset.StandardCharsets.UTF_8))
+            if (errTail.length > 4000) errTail.delete(0, errTail.length - 2000)
+          }
+          n = p.getErrorStream.read(buf)
+        }
+      } catch { case _: Throwable => () }
+    })
+    drain.setDaemon(true)
+    drain.start()
     private val out = new java.io.BufferedReader(
       new java.io.InputStreamReader(p.getInputStream))
     private val in = new java.io.BufferedWriter(
@@ -391,8 +375,7 @@ object BenchCdc {
       * block forever. Polls ready() so the block happens only when a
       * line is (at least partially) available. ready() is false at EOF
       * too, so a DEAD child (exited, pipe drained) is detected explicitly
-      * — without that check a crash would spin the full timeout per step
-      * where the old blocking readLine saw null immediately. */
+      * instead of spinning the full timeout. */
     private def readUntil(prefix: String, timeoutSecs: Long): Option[String] = {
       val deadline = System.nanoTime() + timeoutSecs * 1000L * 1000 * 1000
       while (System.nanoTime() < deadline) {
@@ -413,129 +396,81 @@ object BenchCdc {
       catch { case _: Throwable => false }
 
     /** One timed rep: (secs, rows, extCores, gcSecs); None = dead OR
-      * wedged past [[RepTimeoutSecs]] (callers close + fall back). */
+      * wedged past [[RepTimeoutSecs]]. */
     def step(): Option[(Double, Long, Double, Double)] =
       try {
         in.write("rep\n"); in.flush()
         readUntil("CHILD_REP ", RepTimeoutSecs).map(parseChildRep)
       } catch { case _: Throwable => None }
 
-    def close(): Unit = {
+    /** Stop the child; with a `failure` reason, also print why and the
+      * tail of its stderr. */
+    def close(failure: String = ""): Unit = {
       try { in.write("exit\n"); in.flush() } catch { case _: Throwable => () }
       try {
         if (!p.waitFor(15, java.util.concurrent.TimeUnit.SECONDS))
           p.destroyForcibly(): Unit
       } catch { case _: Throwable => p.destroyForcibly(): Unit }
+      if (failure.nonEmpty) {
+        drain.join(2000) // the exited child's last stderr bytes
+        System.err.println(s"pinned child ($cpus cores on $cpuset) $failure:\n" +
+          errTail.synchronized(errTail.toString))
+      }
     }
   }
 
-  /** One CHILD_REP wire line → (secs, rows, extCores, gcSecs). The single
-    * decoder for both the stepped and batch protocols — the format lives
-    * in [[childMain]]/[[childStepMain]]'s println and here, nowhere else. */
-  private def parseChildRep(l: String): (Double, Long, Double, Double) = {
-    val f = l.stripPrefix("CHILD_REP ").split(',')
-    (f(0).toDouble, f(1).toLong, f(2).toDouble,
-      if (f.length > 3) f(3).toDouble else -1.0)
-  }
-
-  /** Spawn a pinned child running `reps` timed replays; parse its per-rep
-    * lines. `cpuset` is the child's core set — callers MUST pass the same
-    * set the leg's stepped child used (the N-core leg pins to the TOP
-    * cores when both stepped children coexist), else this fallback would
-    * overlap the surviving sibling's pinned cores and contaminate exactly
-    * the measurement the disjoint guard protects. Falls back to ONE
-    * in-process unpinned rep if the child cannot run (missing taskset,
-    * cpuset-denied mask, crash) — an aborted bench helps nobody; fallback
-    * reps carry ext = [[ScalingEstimator.UnpinnedExt]], which EXCLUDES
-    * them from the minima whenever the leg has pinned evidence (an
-    * unpinned local[N] borrows idle cores and would overstate the leg). */
-  private def measurePinned(cpus: Int, reps: Int, cfg: Cfg,
-                            cpuset: String,
-                            extraEnv: Map[String, String] = Map.empty)
-      : ScalingEstimator.LegResult = {
-    val cmd = childCmd(cpus, cpuset, Seq("child", cpus.toString, reps.toString))
-    def fallback(reason: String): ScalingEstimator.LegResult = {
-      System.err.println(s"pinned child failed ($reason); running in-process unpinned")
-      val spark = session(cpus)
-      try {
-        val warmDir = s"${cfg.work}/table_${cpus}_warm"
-        rm(warmDir)
-        ingest.BatchReplay.replay(spark, cfg.warmLogDir, new LakeTable(spark, warmDir),
-          numBuckets = cfg.buckets, saltBuckets = cfg.salt, recordMeta = false,
-          shaColumn = true, format = cfg.format)
-        rm(warmDir)
-        val tableDir = s"${cfg.work}/table_$cpus"
-        val (secs, rows, _, _) = timedRep(spark, cfg, tableDir, 0 until 0)
-        rm(tableDir)
-        ScalingEstimator.LegResult(Seq((secs, ScalingEstimator.UnpinnedExt)), rows)
-      } finally spark.stop()
-    }
+  /** The in-process UNPINNED fallback: one rep when no pinned child can
+    * run (missing taskset, cpuset-denied mask, crash) — an aborted bench
+    * helps nobody. The rep carries ext = [[ScalingEstimator.UnpinnedExt]],
+    * which EXCLUDES it from the floors whenever the leg has pinned
+    * evidence (an unpinned local[N] borrows idle cores and would overstate
+    * the leg). */
+  private def unpinnedRep(cpus: Int, cfg: Cfg): (Double, Long, Double, Double) = {
+    System.err.println(s"no pinned child for $cpus cores; one rep in-process unpinned")
+    val spark = warmedSession(cpus, cfg)
+    val tableDir = s"${cfg.work}/table_$cpus"
     try {
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectErrorStream(true)
-      sys.env.foreach { case (k, v) => pb.environment().put(k, v) }
-      extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
-      // aim the child's /proc/stat accounting at ITS cpuset (a stepping
-      // child's leaked env value would mis-aim it)
-      if (cpuset == s"0-${cpus - 1}") pb.environment().remove("GRAFT_CHILD_CPUSET")
-      else pb.environment().put("GRAFT_CHILD_CPUSET", cpuset)
-      val p = pb.start()
-      // collect stdout on a thread so a bounded waitFor can kill a WEDGED
-      // child (readAllBytes first would block past any budget)
-      val outBuf = new java.io.ByteArrayOutputStream()
-      val collector = new Thread(() => {
-        try p.getInputStream.transferTo(outBuf): Unit
-        catch { case _: Throwable => () }
-      })
-      collector.setDaemon(true)
-      collector.start()
-      val budget = RepTimeoutSecs * (reps + 1) // + warmup
-      if (!p.waitFor(budget, java.util.concurrent.TimeUnit.SECONDS)) {
-        p.destroyForcibly(): Unit
-        p.waitFor(15, java.util.concurrent.TimeUnit.SECONDS): Unit
-      }
-      collector.join(2000)
-      val out = outBuf.toString(java.nio.charset.StandardCharsets.UTF_8)
-      val exit = if (p.isAlive) -1 else p.exitValue()
-      val repLines = out.linesIterator.filter(_.startsWith("CHILD_REP ")).toSeq
-      if (exit == 0 && repLines.nonEmpty) {
-        val parsed = repLines.map(parseChildRep)
-        val rows = parsed.map(_._2).distinct
-        require(rows.size == 1, s"child reps disagree on final rows: $rows")
-        parsed.foreach { case (s, _, e, g) =>
-          println(f"""{"cores":$cpus,"rep_secs":$s%.2f,"ext_cores":$e%.2f,"gc_secs":$g%.2f}""")
-        }
-        ScalingEstimator.LegResult(parsed.map(p0 => (p0._1, p0._3)), rows.head)
-      } else {
-        System.err.println(out.takeRight(2000))
-        fallback(if (exit != 0) s"exit code $exit" else "no CHILD_REP lines")
-      }
-    } catch {
-      case e: java.io.IOException => fallback(e.getMessage) // no taskset (non-Linux)
+      val (secs, rows, _, gc) = timedRep(spark, cfg, tableDir, 0 until 0)
+      (secs, rows, ScalingEstimator.UnpinnedExt, gc)
+    } finally {
+      rm(tableDir)
+      spark.stop()
     }
   }
-
-  /** Guard-excluded paired rounds as JSON — one shape for both mains. */
-  private[graft] def pairedExcludedJson(e: ScalingEstimator.Estimates): String =
-    e.pairedExcluded
-      .map { case (nSecs, eff) => f"""{"secs_n":$nSecs%.2f,"eff":$eff%.3f}""" }
-      .mkString("[", ",", "]")
 
   final case class ScalingResult(nEvents: Long,
                                  nCores: Int, mCores: Int,
-                                 est: ScalingEstimator.Estimates,
+                                 est: ScalingEstimator.Estimate,
                                  reps: Seq[ScalingEstimator.Rep],
                                  rows: Long,
                                  /** Epoch count actually measured (post
                                    * clamp) — reporters must echo this,
                                    * not their requested value. */
-                                 nBatches: Int = 1) {
+                                 nBatches: Int) {
     def throughput(cpus: Int): Long = (nEvents / est.minSecs(cpus)).toLong
+
+    /** The one JSON shape of a scaling run, printed by both mains.
+      * `rep_secs` keeps its historical [[cores, secs], ...] shape; `reps`
+      * adds the kernel-measured external load (ext_cores: -1 unmeasured,
+      * -2 unpinned fallback) and the adaptive round of each sample, so a
+      * reader can recompute `scaling_efficiency` and both flags. */
+    def json: String = {
+      val (nC, mC) = (nCores, mCores)
+      val repSecs = reps.map(x => f"""[${x.cores},${x.secs}%.2f]""").mkString("[", ",", "]")
+      val repsFull = reps.map(x =>
+        f"""{"cores":${x.cores},"secs":${x.secs}%.2f,"ext_cores":${x.extCores}%.2f,"round":${x.round}}""")
+        .mkString("[", ",", "]")
+      f"""{"events":$nEvents,"epochs":$nBatches,"n_cores":$nC,"secs_n":${est.minSecs(nC)}%.2f,""" +
+        f""""events_per_sec_n":${throughput(nC)},"n4_cores":$mC,"secs_4n":${est.minSecs(mC)}%.2f,""" +
+        f""""events_per_sec_4n":${throughput(mC)},"scaling_efficiency":${est.efficiency}%.3f,""" +
+        s""""certified":${est.certified},"superlinear":${est.superlinear},""" +
+        s""""final_rows":$rows,"rep_secs":$repSecs,"reps":$repsFull}"""
+    }
   }
 
   /** The full two-cluster-size protocol; prints per-rep progress, returns
-    * all reps + estimates. See ScalingEstimator for the estimator design
-    * and the adaptive sampling policy. */
+    * all reps + the estimate. See ScalingEstimator for the estimator and
+    * the adaptive sampling policy. */
   def runScaling(coreList: Seq[Int],
                  budgetSecs: Int = envInt("SPARK_GRAFT_BENCH_BUDGET", 1320),
                  targetEff: Double = 0.8,
@@ -552,97 +487,59 @@ object BenchCdc {
       .map(b => Map("SPARK_GRAFT_BENCH_BATCHES" -> b.toString)).getOrElse(Map.empty)
     ensureLogs(cfg)
     val (nC, mC) = (coreList.head, coreList.last)
-    // Persistent stepping children (one per core level) make the marginal
-    // draw cost the rep itself instead of rep + 30 s JVM warmup, so the
-    // budget buys 2-3× more samples AND each adaptive round's legs share
-    // a tight (~2 min) host window — exactly what the paired estimator
-    // needs. The N-core child pins to the TOP cores so the two pinned
-    // sets never overlap (the idle child's JVM housekeeping stays off the
-    // measured set). Reps per round: 1 N-leg draw + 3 4N-leg draws (the
-    // 4N leg is the noise victim; its draws are 3-4× cheaper).
+    // Reps per round: 1 N-leg draw + 3 4N-leg draws (the 4N leg is the
+    // noise victim; its draws are 3-4× cheaper).
     val repsN = envInt("SPARK_GRAFT_BENCH_REPS_N", 1)
     val repsM = envInt("SPARK_GRAFT_BENCH_REPS_4N", 3)
     val avail = Runtime.getRuntime.availableProcessors
-    // Persistent children only when the two pinned sets can be DISJOINT;
-    // otherwise the idle sibling JVM's housekeeping lands on the measured
-    // cpu set during every timed rep (contamination the batch protocol —
-    // children never coexist — does not have). Small hosts get the batch
-    // protocol, loudly.
+    // Children persist across legs only when the two pinned sets can be
+    // DISJOINT (the N-core child pins to the TOP cores); otherwise the
+    // idle sibling JVM's housekeeping would land on the measured cpu set
+    // during every timed rep, so each leg spawns, draws and closes its
+    // own child and children never coexist.
     val disjoint = nC == mC || avail >= mC + nC
     if (!disjoint)
       System.err.println(s"pinned sets for $nC+$mC cores would overlap on " +
-        s"$avail available processors; using the batch protocol (children never coexist)")
-    // A batch child pays the full JVM+Spark warmup per spawn; when the
-    // stepped path is unavailable, amortize it over at least the old
-    // batch protocol's per-spawn rep counts (2 N-leg / 6 4N-leg draws)
-    // instead of the stepped path's cheap per-round asks.
-    def batchReps(cores: Int, n: Int): Int =
-      math.max(n, if (cores == mC && nC != mC) 6 else 2)
-    val children = scala.collection.mutable.Map.empty[Int, Option[SteppedChild]]
-    // ONE cpuset rule for a leg, shared by the stepped child AND the
-    // batch fallback: under the disjoint (stepped) regime the N-core leg
-    // lives on the TOP cores — a fallback child pinned to 0..n-1 there
-    // would overlap the surviving mC stepped sibling's cores, inflating
-    // the very reps the disjoint guard exists to keep clean
+        s"$avail available processors; one child per leg invocation")
+    // A per-leg child pays the full JVM+Spark warmup per spawn: amortize
+    // it over at least 2 N-leg / 6 4N-leg draws.
+    def drawsPerLeg(cores: Int, n: Int): Int =
+      if (disjoint) math.max(1, n)
+      else math.max(n, if (cores == mC && nC != mC) 6 else 2)
     def cpusetFor(cores: Int): String =
       if (disjoint && cores == nC && nC != mC) s"${avail - nC}-${avail - 1}"
       else s"0-${cores - 1}"
-    def childFor(cores: Int): Option[SteppedChild] =
-      children.getOrElseUpdate(cores, {
-        if (!disjoint) None
-        else {
-          val cpuset = cpusetFor(cores)
-          try {
-            val c = new SteppedChild(cores, cpuset, extraEnv)
-            if (c.ready) Some(c)
-            else { c.close(); System.err.println(s"stepped child ($cores cores) failed to warm; batch fallback"); None }
-          } catch { case e: Throwable =>
-            System.err.println(s"stepped child ($cores cores) unavailable (${e.getMessage}); batch fallback")
-            None
-          }
-        }
-      })
-    val runLeg: (Int, Int) => ScalingEstimator.LegResult = (cores, n) =>
-      childFor(cores) match {
-        case Some(c) =>
-          val want = math.max(1, n) // a 0-rep ask would make fromChild.get below unsound
-          val drawn = scala.collection.mutable.ArrayBuffer.empty[(Double, Long, Double, Double)]
-          var died = false
-          while (drawn.length < want && !died) {
-            c.step() match {
-              case Some(r) => drawn += r
-              case None => // child died mid-leg: top up from the batch path
-                died = true
-                children(cores) = None
-                c.close()
-                System.err.println(
-                  s"stepped child ($cores cores) died after ${drawn.length}/$want draws; batch fallback for the rest")
-            }
-          }
-          val fromChild: Option[ScalingEstimator.LegResult] =
-            if (drawn.isEmpty) None
-            else {
-              val rows = drawn.map(_._2).distinct
-              require(rows.size == 1, s"child reps disagree on final rows: $rows")
-              drawn.foreach { case (s, _, e, g) =>
-                println(f"""{"cores":$cores,"rep_secs":$s%.2f,"ext_cores":$e%.2f,"gc_secs":$g%.2f}""")
-              }
-              Some(ScalingEstimator.LegResult(drawn.toSeq.map(r => (r._1, r._3)), rows.head))
-            }
-          if (!died) fromChild.get // loop only exits undied with all n drawn
-          else {
-            val batch = measurePinned(cores, batchReps(cores, want - drawn.length),
-              cfg, cpusetFor(cores), extraEnv)
-            fromChild match {
-              case Some(cr) =>
-                require(cr.rows == batch.rows,
-                  s"stepped and batch reps disagree on final rows: ${cr.rows} vs ${batch.rows}")
-                ScalingEstimator.LegResult(cr.reps ++ batch.reps, cr.rows)
-              case None => batch
-            }
-          }
-        case None => measurePinned(cores, batchReps(cores, n), cfg, cpusetFor(cores), extraEnv)
+    def spawn(cores: Int): Option[SteppedChild] =
+      try {
+        val c = new SteppedChild(cores, cpusetFor(cores), extraEnv)
+        if (c.ready) Some(c) else { c.close("failed to warm"); None }
+      } catch { case e: Throwable =>
+        System.err.println(s"pinned child ($cores cores) unavailable (${e.getMessage})")
+        None
       }
+    val live = scala.collection.mutable.Map.empty[Int, SteppedChild]
+    val runLeg: (Int, Int) => ScalingEstimator.LegResult = (cores, n) => {
+      val want = drawsPerLeg(cores, n)
+      val drawn = scala.collection.mutable.ArrayBuffer.empty[(Double, Long, Double, Double)]
+      var child = live.remove(cores).orElse(spawn(cores))
+      var respawned = false
+      while (drawn.length < want && child.isDefined) {
+        child.get.step() match {
+          case Some(r) => drawn += r
+          case None => // died or wedged: one fresh child for the remaining draws
+            child.get.close(s"died after ${drawn.length}/$want draws")
+            child = if (respawned) None else { respawned = true; spawn(cores) }
+        }
+      }
+      child.foreach(c => if (disjoint) live(cores) = c else c.close())
+      val reps = if (drawn.nonEmpty) drawn.toSeq else Seq(unpinnedRep(cores, cfg))
+      val rows = reps.map(_._2).distinct
+      require(rows.size == 1, s"reps disagree on final rows: $rows")
+      reps.foreach { case (s, _, e, g) =>
+        println(f"""{"cores":$cores,"rep_secs":$s%.2f,"ext_cores":$e%.2f,"gc_secs":$g%.2f}""")
+      }
+      ScalingEstimator.LegResult(reps.map(r => (r._1, r._3)), rows.head)
+    }
     val t0 = System.nanoTime()
     try {
       val (reps, rows) = ScalingEstimator.adaptive(
@@ -655,14 +552,13 @@ object BenchCdc {
         elapsed = () => (System.nanoTime() - t0) / 1e9)
       ScalingResult(cfg.nEvents, nC, mC, ScalingEstimator.estimate(reps, nC, mC), reps, rows,
         nBatches = cfg.nBatches)
-    } finally children.values.flatten.foreach(_.close())
+    } finally live.values.foreach(_.close())
   }
 
   /** SPARK_GRAFT_CORES_LIST parsed + VALIDATED — the one entry point for
-    * both mains (Bench previously parsed it unvalidated: an over-avail
-    * core count silently degraded every leg to the unpinned fallback
-    * with local[N] oversubscribing the host, printing normal-looking but
-    * meaningless numbers). */
+    * both mains (an over-avail core count would silently degrade every
+    * leg to the unpinned fallback with local[N] oversubscribing the host,
+    * printing normal-looking but meaningless numbers). */
   private[graft] def coreListFromEnv(): Seq[Int] = {
     val raw = sys.env.getOrElse("SPARK_GRAFT_CORES_LIST", "2,8")
     val coreList = raw.split(',').map(_.trim.toIntOption.getOrElse(
@@ -677,15 +573,14 @@ object BenchCdc {
     coreList
   }
 
+  /** Modes: no args = the scaling protocol (prints one JSON line);
+    * `childstep <cores>` = the stepping child; `childadapt <cores>
+    * [minReps maxReps patience budgetSecs]` = the self-stopping child
+    * tools/cluster_scaling.sh runs under spark-submit. */
   def main(args: Array[String]): Unit = {
     // CHILD_REP and the JSON result lines are machine-parsed; pin the
     // default locale so f"%.3f" never emits comma decimal separators.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    if (args.length >= 2 && args(0) == "child") {
-      val reps = if (args.length >= 3) args(2).toInt else 1
-      childMain(args(1).toInt, reps, cfgFromEnv)
-      sys.exit(0)
-    }
     if (args.length >= 2 && args(0) == "childstep") {
       childStepMain(args(1).toInt, cfgFromEnv)
       sys.exit(0)
@@ -696,15 +591,6 @@ object BenchCdc {
         patience = a(4, 3), budgetSecs = a(5, 600).toLong, cfgFromEnv)
       sys.exit(0)
     }
-    val coreList = coreListFromEnv()
-    val r = runScaling(coreList)
-    Seq(r.nCores, r.mCores).distinct.foreach { cpus =>
-      println(f"""{"cores":$cpus,"secs":${r.est.minSecs(cpus)}%.2f,"events_per_sec":${r.throughput(cpus)},"rows":${r.rows}}""")
-    }
-    println(f"""{"scaling":"${r.nCores}->${r.mCores}","efficiency":${r.est.headline}%.3f,""" +
-      f""""min_of_k":${r.est.effMinOfK}%.3f,"clean":${r.est.effClean.getOrElse(-1.0)}%.3f,""" +
-      f""""paired_median":${r.est.effPairedMedian.getOrElse(-1.0)}%.3f,""" +
-      f""""paired_best":${r.est.effPairedBest.getOrElse(-1.0)}%.3f,""" +
-      s""""paired_excluded":${pairedExcludedJson(r.est)}}""")
+    println(runScaling(coreListFromEnv()).json)
   }
 }

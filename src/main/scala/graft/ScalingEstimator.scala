@@ -1,53 +1,44 @@
 package graft
 
-/** Estimators for the two-cluster-size scaling criterion, factored out of
-  * the measurement loop so specs can drive them with injected (fake or
-  * historical) rep timings — including the recorded noisy-window
-  * regression from BENCH_r03.
+/** The two-cluster-size scaling estimator, factored out of the measurement
+  * loop so specs can drive it with injected (fake or historical) rep
+  * timings — including the recorded windows of BENCH_r03, r04 and r05.
   *
   * The measurement problem: the sandbox VM suffers intermittent external
   * CPU pressure (hypervisor steal + co-tenant load, both visible in
   * /proc/stat) that inflates individual reps by up to 4×, and hits the 4N
   * leg disproportionately (8 busy pinned cores contend for the whole
-  * socket; 2 barely notice). A single estimator is not robust to that, so
-  * the protocol computes several — every one derived ONLY from real
-  * measured runs, all raw samples reported:
+  * socket; 2 barely notice). External load only ever SLOWS a rep, so each
+  * leg's fastest rep (its floor) is the least contaminated sample it has.
   *
-  *  - '''min-of-K''': classic best-observed-time per leg. Consistent (only
-  *    improves with samples) but requires EACH leg to eventually draw a
-  *    quiet-window sample.
-  *  - '''clean-window min''': min over reps whose measured external load
-  *    (other processes + steal on the pinned cores, from the kernel's own
-  *    accounting) stayed under a threshold. This is min-of-K restricted to
-  *    samples the kernel certifies as uncontaminated — the most
-  *    trustworthy estimate when available.
-  *  - '''paired per-round''': both legs of one interleaved round share the
-  *    host window, so their ratio cancels window-level (slowly-varying)
-  *    noise that global min-of-K cannot. Only rounds whose N-leg lands
-  *    within 15% of the global N minimum count (the guard keeps a
-  *    noise-inflated NUMERATOR from overstating efficiency: an eligible
-  *    round's ratio is bounded by 1.15× the true one); reported as the
-  *    median and the best over eligible rounds.
+  * ONE efficiency is reported: per-leg '''min-of-K''',
+  * `(floor_N / floor_M) / (M / N)`. It only improves with samples and needs
+  * each leg to draw one quiet-window rep at some point. Two flags qualify
+  * it, neither changes it:
   *
-  * The headline efficiency is the max of the defined estimators: each is
-  * an unbiased-or-conservative estimate of the same underlying quantity
-  * degraded differently by one-sided noise (external load only ever SLOWS
-  * a rep), so under noise the max is the least-degraded estimate, and in
-  * a quiet window they all agree.
+  *  - `certified`: every leg's floor rep is itself kernel-clean (the
+  *    kernel measured at most [[CleanExtCores]] of external load on the
+  *    pinned set while that very rep ran). An uncertified value may rest
+  *    on a contaminated floor — most dangerously an inflated N floor,
+  *    which overstates efficiency.
+  *  - `superlinear`: the value is above 1.0, which a compute-bound replay
+  *    cannot honestly reach; it points at a contaminated N floor or a
+  *    cache effect, never at good scaling.
+  *
+  * Every raw rep is reported alongside, so any reader can recompute it.
   */
 object ScalingEstimator {
 
   /** One measured repetition.
     * @param extCores external busy cores measured on the pinned CPU set
     *                 during the rep (co-tenant processes + hypervisor
-    *                 steal); -1 = pinned but unmeasurable (treated as
-    *                 not-clean); [[UnpinnedExt]] (-2) = the in-process
-    *                 UNPINNED fallback — an unpinned local[N] run borrows
-    *                 idle cores and can beat any honest pinned run, so
-    *                 these reps are EXCLUDED from the minima whenever the
-    *                 leg has at least one pinned rep (see preferPinned)
-    * @param round    interleaved parent round id (rounds with both legs
-    *                 contribute to the paired estimators) */
+    *                 steal); -1 = pinned but unmeasurable (never clean);
+    *                 [[UnpinnedExt]] (-2) = the in-process UNPINNED
+    *                 fallback — an unpinned local[N] run borrows idle
+    *                 cores and can beat any honest pinned run, so these
+    *                 reps are EXCLUDED from the floors whenever the leg
+    *                 has at least one pinned rep (see preferPinned)
+    * @param round    adaptive round the rep was drawn in (reported only) */
   final case class Rep(cores: Int, secs: Double, extCores: Double, round: Int)
 
   /** extCores sentinel for unpinned-fallback reps. */
@@ -67,79 +58,25 @@ object ScalingEstimator {
     * percent at 8 pinned cores. */
   val CleanExtCores = 0.25
 
-  /** Paired-round eligibility guard: the round's N-leg must be within
-    * this factor of the global N minimum for the round to count toward
-    * effPairedBest (bounds numerator inflation). */
-  val PairedNumeratorGuard = 1.15
+  def isClean(r: Rep): Boolean = r.extCores >= 0 && r.extCores <= CleanExtCores
 
-  final case class Estimates(
-      effMinOfK: Double,
-      effClean: Option[Double],
-      effPairedMedian: Option[Double],
-      effPairedBest: Option[Double],
-      /** Per-leg minima backing effMinOfK. */
-      minSecs: Map[Int, Double],
-      /** Per-leg clean minima (only legs that have ≥1 clean rep). */
-      cleanMinSecs: Map[Int, Double],
-      /** (nLegSecs, ratio) of paired rounds the numerator guard EXCLUDED.
-        * Reported, never used: a round can miss the 1.15× cutoff by a
-        * hair while its ratio is honest (BENCH_r04's round 2 measured
-        * 0.950 and was dropped at a 0.2% cutoff miss) — a reader of the
-        * JSON must be able to see what was measured, not only what the
-        * guard admitted. */
-      pairedExcluded: Seq[(Double, Double)] = Nil) {
-    /** max of the defined estimators — see the object scaladoc. */
-    def headline: Double =
-      (Seq(effMinOfK) ++ effClean ++ effPairedMedian ++ effPairedBest).max
-    /** True when both legs have at least one kernel-certified clean rep.
-      * REPORTING/spec accessor only — the adaptive sampler's stop
-      * condition is `headline >= targetEff` plus a clean (or entirely
-      * ext-unmeasurable) N-leg floor (see `adaptive.nFloorCertified`);
-      * the M leg never needs a clean rep to stop (phase 2's FOCUS
-      * heuristic merely steers toward a leg lacking one). Structurally
-      * unsatisfiable when nCores == mCores (one leg level). */
-    def bothLegsClean: Boolean = cleanMinSecs.size >= 2
+  /** @param efficiency min-of-K scaling efficiency (see the object doc)
+    * @param floors     each leg's fastest usable rep, keyed by core count */
+  final case class Estimate(efficiency: Double, floors: Map[Int, Rep]) {
+    def minSecs(cores: Int): Double = floors(cores).secs
+    def certified: Boolean = floors.values.forall(isClean)
+    def superlinear: Boolean = efficiency > 1.0
   }
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
-
-  /** Compute all estimators for the (nCores → mCores) scaling pair.
-    * Requires ≥1 rep at each of the two levels. */
-  def estimate(reps: Seq[Rep], nCores: Int, mCores: Int): Estimates = {
-    val ideal = mCores.toDouble / nCores
-    def eff(nSecs: Double, mSecs: Double): Double = (nSecs / mSecs) / ideal
+  /** The (nCores → mCores) estimate. Requires ≥1 rep at each level. */
+  def estimate(reps: Seq[Rep], nCores: Int, mCores: Int): Estimate = {
     val byLevel = reps.groupBy(_.cores)
     require(byLevel.contains(nCores) && byLevel.contains(mCores),
       s"need reps at both $nCores and $mCores cores, have ${byLevel.keySet}")
-    val minN = preferPinned(byLevel(nCores)).map(_.secs).min
-    val minM = preferPinned(byLevel(mCores)).map(_.secs).min
-
-    val clean = reps.filter(r => r.extCores >= 0 && r.extCores <= CleanExtCores)
-    val cleanMin = clean.groupBy(_.cores).view.mapValues(_.map(_.secs).min).toMap
-    val effClean = for {
-      cn <- cleanMin.get(nCores)
-      cm <- cleanMin.get(mCores)
-    } yield eff(cn, cm)
-
-    val pairedRounds = reps.groupBy(_.round).values.toSeq
-      .filter(rs => rs.exists(_.cores == nCores) && rs.exists(_.cores == mCores))
-      .map { rs =>
-        val rn = preferPinned(rs.filter(_.cores == nCores)).map(_.secs).min
-        val rm = preferPinned(rs.filter(_.cores == mCores)).map(_.secs).min
-        (rn, eff(rn, rm))
-      }
-    val (eligible, excluded) =
-      pairedRounds.partition(_._1 <= PairedNumeratorGuard * minN)
-    val effPairedMedian =
-      if (eligible.nonEmpty) Some(median(eligible.map(_._2))) else None
-    val effPairedBest =
-      if (eligible.nonEmpty) Some(eligible.map(_._2).max) else None
-
-    Estimates(eff(minN, minM), effClean, effPairedMedian, effPairedBest,
-      Map(nCores -> minN, mCores -> minM), cleanMin, excluded)
+    val floors = Seq(nCores, mCores).distinct
+      .map(c => c -> preferPinned(byLevel(c)).minBy(_.secs)).toMap
+    val ideal = mCores.toDouble / nCores
+    Estimate((floors(nCores).secs / floors(mCores).secs) / ideal, floors)
   }
 
   // ----- adaptive sampling loop (measurement-agnostic, spec-drivable) ----
@@ -150,14 +87,18 @@ object ScalingEstimator {
 
   /** The adaptive two-phase protocol, parameterized over the actual
     * measurement (`runLeg(cores, reps) => LegResult`) and the clock so
-    * specs can replay recorded windows:
+    * specs can replay recorded windows. It stops once the efficiency
+    * clears `targetEff` AND every leg's floor is kernel-clean — a leg with
+    * no ext-measurable rep at all (non-Linux, unpinned fallback) counts as
+    * settled, since an unsatisfiable requirement would only burn the
+    * budget:
     *
     * phase 1 — interleaved rounds (N then 4N), at least `minRounds`,
-    * stopping early once the headline estimate clears `targetEff`;
-    * phase 2 — while under target and budget: spend remaining samples on
-    * the leg most likely to improve the estimate (a leg with no
-    * kernel-clean rep yet, else the leg with the widest observed spread —
-    * its minimum is the least converged).
+    * stopping early once the stop rule holds;
+    * phase 2 — while it does not and budget remains: spend samples on a
+    * leg whose floor is not clean (4N first — the usual noise victim),
+    * else on the leg with the widest observed spread, whose floor is the
+    * least converged.
     */
   def adaptive(nCores: Int, mCores: Int,
                repsPerLegN: Int, repsPerLegM: Int,
@@ -177,23 +118,16 @@ object ScalingEstimator {
       r.reps.foreach { case (secs, ext) => acc += Rep(cores, secs, ext, round) }
       all = acc.result()
     }
-    def est: Option[Estimates] =
+    def est: Option[Estimate] =
       if (all.exists(_.cores == nCores) && all.exists(_.cores == mCores))
         Some(estimate(all, nCores, mCores))
       else None
-    /** Early-stop guard on the NUMERATOR: efficiency overstates exactly
-      * when the N leg never draws its floor (min-of-K's denominator only
-      * tightens, but nothing else bounds the numerator the way the paired
-      * guard does) — so stopping early additionally requires the N leg to
-      * hold ≥1 kernel-certified clean rep, i.e. the kernel saw its floor
-      * drawn in a quiet window. Vacuously true when no N rep could be
-      * ext-measured at all (non-Linux / unpinned fallback): an
-      * unsatisfiable requirement would just burn the budget for nothing. */
-    def nFloorCertified: Boolean = {
-      val measured = all.filter(r => r.cores == nCores && r.extCores >= 0)
-      measured.isEmpty || measured.exists(_.extCores <= CleanExtCores)
-    }
-    def passed: Boolean = est.exists(_.headline >= targetEff) && nFloorCertified
+    /** The leg's floor is clean, or none of its reps was ext-measurable. */
+    def settled(e: Estimate, cores: Int): Boolean =
+      isClean(e.floors(cores)) ||
+        !all.exists(r => r.cores == cores && r.extCores >= 0)
+    def passed: Boolean = est.exists(e =>
+      e.efficiency >= targetEff && settled(e, nCores) && settled(e, mCores))
 
     // phase 1: interleaved rounds
     var continue = true
@@ -205,12 +139,12 @@ object ScalingEstimator {
         (!passed && round < maxRounds && elapsed() < budgetSecs)
       if (passed && round >= minRounds) continue = false
     }
-    // phase 2: focused sampling while under target and budget
+    // phase 2: focused sampling while the stop rule fails and budget remains
     while (!passed && elapsed() < budgetSecs) {
       val e = est.get
       val focus =
-        if (!e.cleanMinSecs.contains(mCores)) mCores
-        else if (!e.cleanMinSecs.contains(nCores)) nCores
+        if (!settled(e, mCores)) mCores
+        else if (!settled(e, nCores)) nCores
         else {
           def spread(c: Int) = {
             val xs = all.filter(_.cores == c).map(_.secs)
@@ -218,7 +152,7 @@ object ScalingEstimator {
           }
           if (spread(mCores) >= spread(nCores)) mCores else nCores
         }
-      round += 1 // single-leg round: excluded from paired estimators
+      round += 1
       leg(focus, if (focus == nCores) repsPerLegN else repsPerLegM)
     }
     (all, rows)

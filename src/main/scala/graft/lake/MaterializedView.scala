@@ -82,7 +82,17 @@ object MaterializedView {
     }
   }
 
-  /** The view's stored rows: groupCols ++ measures ++ `_n_rows`. */
+  /** The view's stored rows: groupCols ++ measures ++ `_n_rows`.
+    *
+    * Reader contract: the returned DataFrame is bound to the data dir of
+    * the pointer resolved here. Once superseded, a later refresh deletes
+    * that dir when it is no longer among the [[SupersededKeepCount]] (4)
+    * newest superseded dirs and was written more than
+    * [[SupersededMinRetainMs]] (10 minutes) ago — under a streaming
+    * refresh cadence, a scan of this DataFrame must finish within 10
+    * minutes, or be materialized (cache + count, or written out) first;
+    * call `read` again for fresh rows. At batch cadences the one-hour
+    * meta-compaction grace (`Maintenance.metaCompactGraceMs`) bounds it. */
   def read(table: LakeTable, name: String): DataFrame = {
     val (_, dir) = currentPointer(table, name).getOrElse(
       throw new IllegalStateException(s"view $name has never been refreshed"))

@@ -128,17 +128,6 @@ final class MergeInto(
     throw new IllegalStateException("unreachable")
   }
 
-  private val debugTimers = sys.env.contains("GRAFT_MERGE_DEBUG")
-  private def timed[T](name: String)(f: => T): T = {
-    if (!debugTimers) f
-    else {
-      val t = System.nanoTime()
-      val r = f
-      println(f"""{"merge_phase":"$name","secs":${(System.nanoTime() - t) / 1e9}%.2f}""")
-      r
-    }
-  }
-
   private def applyNew(events: DataFrame, epochId: Long,
                        snapOpt: Option[Snapshot], t0: Long): MergeStats = {
     // a merge built for the wrong bucket count would prune by bucket ids
@@ -203,8 +192,8 @@ final class MergeInto(
     // observation instead (below).
     val touched: Set[Int] = snapOpt match {
       case None => (0 until numBuckets).toSet
-      case Some(_) => timed("touched")(source.select(bucketExpr.as(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSet)
+      case Some(_) => source.select(bucketExpr.as(BucketCol)).distinct()
+        .collect().map(_.getInt(0)).toSet
     }
 
     val targetFiles = snapOpt.map(_.filesIn(touched)).getOrElse(Seq.empty)
@@ -285,12 +274,12 @@ final class MergeInto(
     val newVersion = snapOpt.map(_.version + 1).getOrElse(0L)
     val writeDir = s"v$newVersion-${java.util.UUID.randomUUID().toString.take(8)}"
     val outDir = s"${table.root}/data/$writeDir"
-    timed("write")(result
+    result
       .write
       .mode("overwrite")
       .option("compression", "zstd")
       .partitionBy(BucketCol)
-      .parquet(outDir))
+      .parquet(outDir)
 
     // the write (or, on incremental epochs, the earlier touched scan)
     // evaluated the observed plan, so the quarantine count is known; the
@@ -305,7 +294,7 @@ final class MergeInto(
     // sub-bucket, and the snapshot's high-water lsn advances iff every
     // file has stats (ordered-log delivery makes rows with
     // lsn <= highWater provably unchanged in later snapshots).
-    val newFiles = timed("list")(table.listDataFilesWithStats(writeDir))
+    val newFiles = table.listDataFilesWithStats(writeDir)
     val statsOk = newFiles.forall(_.hasStats)
     // Ordered-log delivery check: a NOVEL source row won its key at an
     // lsn at or below the previous high-water mark — out-of-global-

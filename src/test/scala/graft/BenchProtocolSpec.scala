@@ -4,13 +4,16 @@ import graft.ScalingEstimator._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scaling-measurement protocol itself, driven with injected (fake and
-  * historical) timings — including the recorded BENCH_r03 noisy window
-  * (VERDICT r3 "What's wrong" #1). The estimators must be HONEST: no
-  * estimator may manufacture a passing number out of a window that never
-  * exhibited scaling; the protocol's robustness comes from cheap adaptive
-  * sampling that hunts for kernel-certified clean reps, not from estimator
-  * arithmetic. */
+  * historical) timings — including the recorded BENCH_r03, r04 and r05
+  * windows. The estimator must be HONEST: it may not manufacture a passing
+  * number out of a window that never exhibited scaling, and a value that
+  * rests on a contaminated floor must carry `certified = false`; the
+  * protocol's robustness comes from cheap adaptive sampling that hunts for
+  * kernel-clean floors, not from estimator arithmetic. */
 class BenchProtocolSpec extends AnyFunSuite {
+
+  private def near(x: Double, want: Double, tol: Double = 0.001) =
+    math.abs(x - want) < tol
 
   /** The exact rep sequence the driver recorded in BENCH_r03 (8M events,
     * cores 2 vs 8, min-of-K read 0.447): six interleaved rounds plus one
@@ -26,80 +29,116 @@ class BenchProtocolSpec extends AnyFunSuite {
 
   test("r03 window: estimators stay honest (no estimator inflates a never-scaled window)") {
     val e = estimate(r03, 2, 8)
-    assert(math.abs(e.effMinOfK - 0.447) < 0.001, s"min-of-k ${e.effMinOfK}")
-    assert(e.effClean.isEmpty, "no ext measurements -> no clean estimate")
-    // eligible paired rounds (N leg within 15% of min) read 0.286/0.245:
-    // the window genuinely never exhibited scaling, and the headline must
-    // not pretend otherwise
-    assert(e.effPairedMedian.exists(m => math.abs(m - 0.265) < 0.002))
-    assert(e.headline < 0.55, s"headline ${e.headline}")
-    assert(!e.bothLegsClean)
+    // the window genuinely never exhibited scaling: min-of-K reads 0.447,
+    // and with no ext measurement no floor is kernel-clean
+    assert(near(e.efficiency, 0.447), s"min-of-k ${e.efficiency}")
+    assert(!e.certified)
+    assert(!e.superlinear)
   }
+
+  /** The builder's same-HEAD clean-window legs (BASELINE.md run i):
+    * 55.12 s @ 2c and 17.14 s @ 8c, added to the r03 window. */
+  private val r03Clean: Seq[Rep] =
+    r03 ++ Seq(Rep(2, 55.12, 0.1, 8), Rep(8, 17.14, 0.05, 8))
 
   test("a single kernel-clean pair repairs the estimate the r03 window was missing") {
-    // the builder's same-HEAD clean-window legs (BASELINE.md run i):
-    // 55.12 s @ 2c and 17.14 s @ 8c. Had the adaptive sampler caught ONE
-    // clean pair inside the driver window, every estimator recovers.
-    val withClean = r03 ++ Seq(Rep(2, 55.12, 0.1, 8), Rep(8, 17.14, 0.05, 8))
-    val e = estimate(withClean, 2, 8)
-    assert(e.bothLegsClean)
-    assert(e.effClean.exists(c => math.abs(c - 0.804) < 0.001), s"clean ${e.effClean}")
-    assert(e.headline >= 0.8, s"headline ${e.headline}")
+    // had the adaptive sampler caught ONE clean pair inside the driver
+    // window, the estimate recovers AND is certified: both floors are
+    // the clean reps
+    val e = estimate(r03Clean, 2, 8)
+    assert(near(e.efficiency, 0.804), s"min-of-k ${e.efficiency}")
+    assert(e.certified)
+    assert(e.floors(2).secs == 55.12 && e.floors(8).secs == 17.14)
   }
 
-  test("steady-pressure window: paired rounds preserve the ratio min-of-K loses") {
-    // both legs of round 1 inflated ~27% by sustained external pressure
-    // (ratio preserved); round 2's 8-core leg alone hit a spike. Global
-    // min-of-K pairs round 2's N with round 1's M across windows and
-    // under-reads; the paired-round estimator keeps round 1's evidence.
-    val reps = Seq(
-      Rep(2, 70.0, 2.0, 1), Rep(8, 21.7, 2.0, 1),  // steady window
-      Rep(2, 56.0, 0.1, 2), Rep(8, 40.0, 6.0, 2))  // N clean, M spiked
-    val e = estimate(reps, 2, 8)
-    assert(e.effMinOfK < 0.7, s"min-of-k ${e.effMinOfK}")
-    // round 1 is ineligible for paired-best (its N leg is >15% off the
-    // global N min — the guard against numerator inflation), so paired
-    // estimates stay conservative here; the clean estimator is absent
-    // (no clean 8-core rep) — the headline correctly stays under target,
-    // and the ADAPTIVE phase would keep sampling the 8-core leg.
-    assert(!e.cleanMinSecs.contains(8))
-    assert(e.headline < 0.8)
+  /** Both legs of round 1 inflated ~27% by sustained external pressure
+    * (ratio preserved); round 2's 8-core leg alone hit a spike. */
+  private val steadyPressure: Seq[Rep] = Seq(
+    Rep(2, 70.0, 2.0, 1), Rep(8, 21.7, 2.0, 1),  // steady window
+    Rep(2, 56.0, 0.1, 2), Rep(8, 40.0, 6.0, 2))  // N clean, M spiked
+
+  test("steady-pressure window: min-of-K reads low and stays uncertified on a dirty 8-core floor") {
+    // min-of-K pairs round 2's clean N with round 1's pressured M across
+    // windows and under-reads; the 8-core floor (ext 2.0) is not clean,
+    // so the value is uncertified and the ADAPTIVE phase would keep
+    // sampling the 8-core leg
+    val e = estimate(steadyPressure, 2, 8)
+    assert(near(e.efficiency, (56.0 / 21.7) / 4), s"min-of-k ${e.efficiency}")
+    assert(e.efficiency < 0.7)
+    assert(!isClean(e.floors(8)) && isClean(e.floors(2)))
+    assert(!e.certified)
   }
 
-  test("numerator guard: an inflated N leg cannot overstate paired-best") {
-    val reps = Seq(
-      Rep(2, 55.0, 0.1, 1), Rep(8, 20.0, 0.1, 1),   // honest round: 0.6875
-      Rep(2, 110.0, 4.0, 2), Rep(8, 20.0, 0.1, 2))  // N inflated 2x: 1.375!
-    val e = estimate(reps, 2, 8)
-    // round 2's ratio (1.375) must be excluded: its N leg is 2x the min
-    assert(e.effPairedBest.exists(b => math.abs(b - 0.6875) < 1e-9),
-      s"paired-best ${e.effPairedBest}")
-    assert(e.headline < 0.7)
+  /** An honest round (0.6875), then a round whose N leg a co-tenant
+    * inflated 2× — its own ratio would read 1.375. */
+  private val inflatedN: Seq[Rep] = Seq(
+    Rep(2, 55.0, 0.1, 1), Rep(8, 20.0, 0.1, 1),
+    Rep(2, 110.0, 4.0, 2), Rep(8, 20.0, 0.1, 2))
+
+  test("inflated N leg: min-of-K keeps the honest floor and the certified 0.6875") {
+    // an inflated N rep is never the N floor, so it cannot reach the
+    // numerator: the value is the honest round's, on clean floors
+    val e = estimate(inflatedN, 2, 8)
+    assert(e.efficiency == (55.0 / 20.0) / 4, s"min-of-k ${e.efficiency}")
+    assert(e.certified)
   }
 
-  /** The exact rep sequence BENCH_r04 recorded (headline passed at 0.825
-    * while round 2's honest paired ratio 0.950 was guard-excluded at a
-    * 0.2% cutoff miss — VERDICT r4 "What's wrong" #1). */
+  /** The exact rep sequence BENCH_r04 recorded (its max-of-estimators
+    * headline read 0.825, equal to min-of-K; every rep kernel-clean). */
   private val r04: Seq[Rep] = Seq(
     Rep(2, 54.47, 0.03, 1), Rep(8, 25.13, 0.07, 1),
     Rep(8, 25.34, 0.11, 1), Rep(8, 18.72, 0.08, 1),
     Rep(2, 62.78, 0.02, 2), Rep(8, 23.38, 0.00, 2),
     Rep(8, 17.80, 0.15, 2), Rep(8, 16.51, 0.10, 2))
 
-  test("r04 window: the guard-excluded round's measured ratio is SURFACED, not erased") {
+  test("r04 window: min-of-K reads 0.825, certified on kernel-clean floors") {
     val e = estimate(r04, 2, 8)
-    assert(math.abs(e.effMinOfK - (54.47 / 16.51) / 4) < 1e-9)
-    // round 1 is the only eligible paired round: (54.47/18.72)/4 = 0.727
-    assert(e.effPairedMedian.exists(m => math.abs(m - 0.7274) < 0.001))
-    // round 2 (N leg 62.78 > 1.15*54.47 = 62.64 by 0.2%) measured 0.950;
-    // the guard still drops it from the estimators (numerator bound) but
-    // the JSON reader must see it was measured
-    assert(e.pairedExcluded.size == 1)
-    val (nSecs, eff) = e.pairedExcluded.head
-    assert(nSecs == 62.78 && math.abs(eff - 0.9505) < 0.001, s"excluded ($nSecs, $eff)")
-    // and the excluded ratio still does not move any estimator
-    assert(e.effPairedBest.exists(b => math.abs(b - 0.7274) < 0.001))
-    assert(math.abs(e.headline - 0.825) < 0.001)
+    assert(math.abs(e.efficiency - (54.47 / 16.51) / 4) < 1e-9)
+    assert(near(e.efficiency, 0.825))
+    assert(e.certified)
+  }
+
+  /** The exact rep sequences BENCH_r05 recorded (`cdc` and
+    * `cdc_incremental` blocks of BENCH_r05.json). */
+  private val r05Backfill: Seq[Rep] = Seq(
+    Rep(2, 63.28, 0.04, 1), Rep(8, 42.61, 0.00, 1), Rep(8, 22.92, 0.13, 1),
+    Rep(8, 19.38, 0.10, 1), Rep(2, 62.27, 0.03, 2))
+  private val r05Incremental: Seq[Rep] = Seq(
+    Rep(2, 225.27, 0.09, 1), Rep(8, 94.97, 0.19, 1), Rep(8, 154.40, 1.39, 1),
+    Rep(8, 56.21, 0.37, 1), Rep(2, 214.12, 0.08, 2))
+
+  test("r05 backfill window: min-of-K reads 0.803, certified") {
+    val e = estimate(r05Backfill, 2, 8)
+    assert(math.abs(e.efficiency - (62.27 / 19.38) / 4) < 1e-9)
+    assert(near(e.efficiency, 0.803))
+    assert(e.certified)
+  }
+
+  test("r05 incremental window: min-of-K reads 0.952, uncertified (8-core floor at ext 0.37)") {
+    // the shipped 1.002 headline was the paired-round max; the 8-core
+    // floor rep (56.21 s) ran with 0.37 external cores on its pinned set
+    val e = estimate(r05Incremental, 2, 8)
+    assert(math.abs(e.efficiency - (214.12 / 56.21) / 4) < 1e-9)
+    assert(near(e.efficiency, 0.952))
+    assert(e.floors(8).extCores == 0.37)
+    assert(!e.certified)
+    assert(!e.superlinear)
+  }
+
+  test("no recorded window yields an unflagged value above 1.0") {
+    val windows = Seq("r03" -> r03, "r03+clean" -> r03Clean,
+      "steady-pressure" -> steadyPressure, "inflated-N" -> inflatedN,
+      "r04" -> r04, "r05 backfill" -> r05Backfill,
+      "r05 incremental" -> r05Incremental)
+    windows.foreach { case (name, reps) =>
+      val e = estimate(reps, 2, 8)
+      // stronger than "unflagged": no recorded window even reaches the flag
+      assert(e.efficiency <= 1.0, s"$name reads ${e.efficiency}")
+    }
+    // and the flag does fire: a 2-core floor inflated past 4× the 8-core
+    // floor reads 1.25, flagged superlinear
+    val e = estimate(Seq(Rep(2, 60.0, 0.1, 1), Rep(8, 12.0, 0.1, 1)), 2, 8)
+    assert(e.efficiency == 1.25 && e.superlinear)
   }
 
   // ---- adaptive sampling loop -------------------------------------------
@@ -130,7 +169,7 @@ class BenchProtocolSpec extends AnyFunSuite {
       box.runLeg, () => box.clock)
     assert(rows == 379758L)
     val e = estimate(reps, 2, 8)
-    assert(e.headline >= 0.8)
+    assert(e.efficiency >= 0.8 && e.certified)
     // two full rounds and nothing more: 4 invocations
     assert(box.calls.length <= 4, s"calls ${box.calls}")
   }
@@ -138,7 +177,7 @@ class BenchProtocolSpec extends AnyFunSuite {
   test("adaptive: noisy window spends phase-2 samples on the dirty 8-core leg until budget") {
     // 2-core leg is clean and stable; 8-core leg contaminated every rep
     // (ext 5 cores) and slow — the protocol must keep buying 8-core
-    // samples (the leg blocking every estimator) until the budget runs out
+    // samples (the leg whose floor is not clean) until the budget runs out
     val box = new FakeBox(
       n = Seq((55.0, 0.1)),
       m = Seq((40.0, 5.0)))
@@ -146,11 +185,11 @@ class BenchProtocolSpec extends AnyFunSuite {
       minRounds = 2, maxRounds = 2, budgetSecs = 800, targetEff = 0.8,
       box.runLeg, () => box.clock)
     val e = estimate(reps, 2, 8)
-    assert(e.headline < 0.8) // never passed — honestly reported
+    assert(e.efficiency < 0.8 && !e.certified) // never passed — honestly reported
     val phase2 = box.calls.drop(4) // first 2 rounds = 4 invocations
     assert(phase2.nonEmpty && phase2.forall(_._1 == 8),
       s"phase-2 must focus the contaminated leg: ${box.calls}")
-    assert(box.clock >= 800 || e.headline >= 0.8)
+    assert(box.clock >= 800)
   }
 
   test("adaptive: one clean 8-core rep mid-noise ends the hunt") {
@@ -162,8 +201,10 @@ class BenchProtocolSpec extends AnyFunSuite {
       minRounds = 2, maxRounds = 6, budgetSecs = 100000, targetEff = 0.8,
       box.runLeg, () => box.clock)
     val e = estimate(reps, 2, 8)
-    assert(e.bothLegsClean)
-    assert(e.headline >= 0.8, s"headline ${e.headline} reps $reps")
+    assert(e.certified)
+    assert(e.efficiency >= 0.8, s"min-of-k ${e.efficiency} reps $reps")
+    // the clean pair landed in round 2, and the hunt ended there
+    assert(box.calls.length == 4, s"calls ${box.calls}")
   }
 
   test("child cpuset parsing: well-formed range of the right width, else default block") {
@@ -179,28 +220,28 @@ class BenchProtocolSpec extends AnyFunSuite {
   test("unpinned-fallback reps cannot drag a leg's minimum below its pinned floor") {
     // an unpinned local[N] run borrows idle cores and can beat any honest
     // pinned run; such reps (ext = UnpinnedExt) must be EXCLUDED from the
-    // minima whenever the leg has pinned evidence — else a failed 4N
-    // child inflates the headline through min-of-K
+    // floors whenever the leg has pinned evidence — else a failed 4N
+    // child inflates the efficiency through min-of-K
     val reps = Seq(
       Rep(2, 60.0, 0.1, 1), Rep(8, 20.0, 0.1, 1),      // pinned, clean
       Rep(8, 12.0, UnpinnedExt, 2),                     // unpinned fallback, "too fast"
       Rep(2, 62.0, -1, 2))
     val e = estimate(reps, 2, 8)
-    assert(e.minSecs(8) == 20.0, s"unpinned 12.0 leaked into the minimum: ${e.minSecs}")
-    assert(e.effMinOfK == (60.0 / 20.0) / 4)
+    assert(e.minSecs(8) == 20.0, s"unpinned 12.0 leaked into the minimum: ${e.floors}")
+    assert(e.efficiency == (60.0 / 20.0) / 4)
+    assert(e.certified)
     // a leg with ONLY unpinned reps still reports (degraded beats absent)
-    val only = Seq(Rep(2, 60.0, 0.1, 1), Rep(8, 12.0, UnpinnedExt, 1))
-    assert(estimate(only, 2, 8).minSecs(8) == 12.0)
-    // and an unpinned rep can never be "clean"
-    assert(estimate(reps, 2, 8).cleanMinSecs.get(8).contains(20.0))
+    val only = estimate(Seq(Rep(2, 60.0, 0.1, 1), Rep(8, 12.0, UnpinnedExt, 1)), 2, 8)
+    assert(only.minSecs(8) == 12.0)
+    // but an unpinned floor is never clean, so the value is never certified
+    assert(!isClean(only.floors(8)) && !only.certified)
   }
 
   test("adaptive: a passing headline with NO clean N-leg rep does not early-stop") {
     // the 2-core leg is measurable but contaminated every draw (ext 2
     // cores): min-of-K reads a "passing" 0.85 off an inflated numerator —
-    // the hardened stop must keep hunting the N floor instead of banking
-    // it (VERDICT r4 "What's wrong" #2: nothing guarded min-of-K's
-    // numerator the way the paired guard does)
+    // the stop rule (both floors clean) must keep hunting the N floor
+    // instead of banking it
     val box = new FakeBox(
       n = Seq((68.0, 2.0)),
       m = Seq((20.0, 0.1)))
@@ -208,37 +249,59 @@ class BenchProtocolSpec extends AnyFunSuite {
       minRounds = 2, maxRounds = 3, budgetSecs = 400, targetEff = 0.8,
       box.runLeg, () => box.clock)
     val e = estimate(reps, 2, 8)
-    assert(e.effMinOfK >= 0.8, s"precondition: the naive headline passes (${e.effMinOfK})")
-    // phase 2 ran and focused the dirty N leg (the M leg is already clean)
+    assert(e.efficiency >= 0.8, s"precondition: the value passes (${e.efficiency})")
+    assert(!e.certified)
+    // phase 2 ran and focused the dirty N leg (the M floor is already clean)
     val phase2 = box.calls.drop(6) // 3 full rounds = 6 invocations
     assert(phase2.nonEmpty && phase2.forall(_._1 == 2),
       s"phase-2 must hunt the uncertified N floor: ${box.calls}")
     assert(box.clock >= 400, "only the budget may end the hunt")
   }
 
+  test("adaptive: a passing value with NO clean 8-core floor does not early-stop") {
+    // the mirror case: the value passes on a contaminated 8-core floor
+    // (ext 0.37, as BENCH_r05's incremental 8-core floor) — the stop
+    // waits for a clean one
+    val box = new FakeBox(
+      n = Seq((55.0, 0.1)),
+      m = Seq((16.0, 0.37)))
+    val (reps, _) = adaptive(2, 8, repsPerLegN = 1, repsPerLegM = 1,
+      minRounds = 2, maxRounds = 3, budgetSecs = 400, targetEff = 0.8,
+      box.runLeg, () => box.clock)
+    val e = estimate(reps, 2, 8)
+    assert(e.efficiency >= 0.8 && !e.certified)
+    val phase2 = box.calls.drop(6)
+    assert(phase2.nonEmpty && phase2.forall(_._1 == 8),
+      s"phase-2 must hunt the uncertified 8-core floor: ${box.calls}")
+    assert(box.clock >= 400, "only the budget may end the hunt")
+  }
+
   test("adaptive: a clean N-leg floor plus passing headline stops after minRounds") {
-    // same shape but the N leg draws a kernel-clean floor: certification
+    // same shape but both legs draw kernel-clean floors: certification
     // holds, the pass is banked immediately (no budget burn)
     val box = new FakeBox(
       n = Seq((55.0, 0.1)),
       m = Seq((17.0, 0.1)))
-    val (_, _) = adaptive(2, 8, repsPerLegN = 1, repsPerLegM = 1,
+    val (reps, _) = adaptive(2, 8, repsPerLegN = 1, repsPerLegM = 1,
       minRounds = 2, maxRounds = 6, budgetSecs = 100000, targetEff = 0.8,
       box.runLeg, () => box.clock)
     assert(box.calls.length <= 4, s"calls ${box.calls}")
+    assert(estimate(reps, 2, 8).certified)
   }
 
   test("adaptive: ext-unmeasurable N leg cannot deadlock the hardened stop") {
-    // non-Linux / unpinned fallback: no N rep carries a kernel reading at
-    // all — certification is vacuous (an unsatisfiable requirement would
-    // burn the whole budget for nothing)
+    // non-Linux / unpinned fallback: no rep of either leg carries a kernel
+    // reading at all — the floors count as settled (an unsatisfiable
+    // requirement would burn the whole budget for nothing), yet the value
+    // is reported uncertified
     val box = new FakeBox(
       n = Seq((55.0, -1.0)),
       m = Seq((17.0, -1.0)))
-    val (_, _) = adaptive(2, 8, repsPerLegN = 1, repsPerLegM = 1,
+    val (reps, _) = adaptive(2, 8, repsPerLegN = 1, repsPerLegM = 1,
       minRounds = 2, maxRounds = 6, budgetSecs = 100000, targetEff = 0.8,
       box.runLeg, () => box.clock)
     assert(box.calls.length <= 4, s"calls ${box.calls}")
+    assert(!estimate(reps, 2, 8).certified)
   }
 
   test("adaptive: rows must agree across every rep") {
